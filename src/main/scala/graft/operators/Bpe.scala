@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.Fixtures.{table, tableParallel}
+import graft.sources.Fixtures.table
 
 /** t50: BPE tokenizer-vocabulary induction (Sennrich et al. 2016) in the
   * shape every production tokenizer trainer actually uses (HuggingFace

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.Fixtures.{table, tableParallel}
+import graft.sources.Fixtures.table
 
 /** One decoded "asset": binary payload + typed metadata. */
 final case class MMAsset(doc_id: Long, payload: Array[Byte], width: Int, height: Int)

@@ -21,8 +21,9 @@ object RelationalOps {
 
   /** The events table with `ts` normalized to the session TimestampType.
     * The generator has written two physical shapes across rounds: µs
-    * timestamps (read natively as TIMESTAMP_NTZ) and raw int64 nanos
-    * (readable only under `spark.sql.legacy.parquet.nanosAsLong=true`,
+    * timestamps (declared TIMESTAMP_NTZ) and raw int64 nanos (read as a
+    * long, see [[graft.sources.Fixtures.events]]; a TIMESTAMP(NANOS)
+    * column reads so only under `spark.sql.legacy.parquet.nanosAsLong=true`,
     * which Bench/Verify/SparkSuite still set — inert for µs files).
     * Normalize BOTH to TimestampType so every downstream derivation is
     * schema-agnostic; the sessions pin UTC, so the NTZ→LTZ cast preserves
@@ -31,13 +32,12 @@ object RelationalOps {
     * a double division would lose precision above 2^53 ns.
     */
   def eventsTable(spark: SparkSession, dir: String): DataFrame = {
-    val raw = table(spark, dir, "events")
+    val raw = graft.sources.Fixtures.events(spark, dir)
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case org.apache.spark.sql.types.TimestampNTZType =>
+      case _ =>
         raw.withColumn("ts", col("ts").cast("timestamp"))
-      case _ => raw
     }
   }
 
@@ -960,8 +960,7 @@ object RelationalOps {
       // no .distinct() prologue: collect_set dedupes per order, and the
       // partial (map-side) collect_set shuffles the same distinct pairs a
       // distinct would — dropping it removes one full corpus Exchange
-      // (r17, guide §2.4; plans/r17/g7_part_triangles_*.txt: 3 → 2
-      // exchanges before the pair explosion)
+      // (3 → 2 exchanges before the pair explosion)
       .groupBy(col("l_orderkey"))
       .agg(array_sort(collect_set(col("l_partkey"))).as("docs"))
       .select(explode(expr(Dedup.OrderedPairsExpr)).as("p"))

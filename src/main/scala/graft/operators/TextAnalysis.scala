@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.Fixtures.{table, tableParallel}
+import graft.sources.Fixtures.table
 
 /** Text-analysis operators for a training-data pipeline over `documents`:
   * token counting, quality scoring, language-ID heuristic, fingerprinting.

@@ -1,8 +1,11 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import graft.model.Schemas
 
 /** Deterministic importer-domain fixtures derived from the driver's TPC-H-ish
   * parquet tables (TESTDATA.md, seed 42) — the scalable stand-ins for the
@@ -23,8 +26,54 @@ import org.apache.spark.sql.functions._
   */
 object Fixtures {
 
+  /** `<dir>/<name>.parquet`, read with its declared schema
+    * ([[graft.model.Schemas.fixture]]): building the DataFrame launches no
+    * schema-inference job.
+    */
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    spark.read.schema(Schemas.fixture(name)).parquet(s"$dir/$name.parquet")
+
+  /** The `events` table. Earlier generators wrote its `ts` as a bare int64
+    * of epoch nanoseconds instead of the declared µs timestamp; such files
+    * are read with [[graft.model.Schemas.EventsNanos]], so `ts` arrives as
+    * that long. Telling the two apart reads one file footer directly
+    * through Hadoop, which launches no Spark job.
+    */
+  def events(spark: SparkSession, dir: String): DataFrame = {
+    val path = s"$dir/events.parquet"
+    val schema = if (tsIsNanos(spark, path)) Schemas.EventsNanos else Schemas.fixture("events")
+    spark.read.schema(schema).parquet(path)
+  }
+
+  private def tsIsNanos(spark: SparkSession, path: String): Boolean = {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit, TimestampLogicalTypeAnnotation}
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+    val conf = spark.sparkContext.hadoopConfiguration
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    val status = fs.getFileStatus(root)
+    val file =
+      if (!status.isDirectory) Some(status)
+      else fs.listStatus(root).find { f =>
+        val n = f.getPath.getName
+        f.isFile && !n.startsWith("_") && !n.startsWith(".")
+      }
+    file.exists { f =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
+      val schema = try reader.getFooter.getFileMetaData.getSchema finally reader.close()
+      schema.containsField("ts") && {
+        val ts = schema.getType(schema.getFieldIndex("ts"))
+        ts.isPrimitive &&
+          ts.asPrimitiveType.getPrimitiveTypeName == PrimitiveTypeName.INT64 &&
+          (ts.getLogicalTypeAnnotation match {
+            case t: TimestampLogicalTypeAnnotation => t.getUnit == TimeUnit.NANOS
+            case _ => true
+          })
+      }
+    }
+  }
 
   /** Ceiling (compressed bytes) under which [[tableParallel]] follows the
     * read with a round-robin repartition to core count, and the per-task
@@ -42,17 +91,26 @@ object Fixtures {
     * INPUT BYTES, so at production scale (many multi-row-group files,
     * far above the ceiling) the branch is inert and no corpus pays the
     * exchange; locally the shuffled bytes are ≤ the ceiling by
-    * construction. Env-overridable; 0 disables.
+    * construction. Env-overridable (`SPARK_GRAFT_SMALL_INPUT_BYTES`);
+    * 0 disables.
     */
-  private val SmallInputCeiling: Long =
-    sys.env.getOrElse("SPARK_GRAFT_SMALL_INPUT_BYTES", (64L << 20).toString).toLong
+  private lazy val SmallInputCeiling: Long =
+    smallInputCeiling(sys.env.get("SPARK_GRAFT_SMALL_INPUT_BYTES"))
   private val SmallInputPerTask: Long = 16L << 10
 
-  private def inputBytes(path: String): Long = {
-    def walk(f: java.io.File): Long =
-      if (f.isDirectory) Option(f.listFiles()).map(_.map(walk).sum).getOrElse(0L)
-      else f.length()
-    walk(new java.io.File(path))
+  /** The [[SmallInputCeiling]] a `SPARK_GRAFT_SMALL_INPUT_BYTES` value
+    * sets: 64 MiB when unset, else a non-negative byte count.
+    */
+  private[graft] def smallInputCeiling(raw: Option[String]): Long =
+    raw.fold(64L << 20) { v =>
+      v.trim.toLongOption.filter(_ >= 0).getOrElse(throw new IllegalArgumentException(
+        s"SPARK_GRAFT_SMALL_INPUT_BYTES must be a non-negative byte count, got '$v'"))
+    }
+
+  /** Bytes under `path` on whatever file system holds it. */
+  private[graft] def inputBytes(spark: SparkSession, path: String): Long = {
+    val p = new Path(path)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).getContentSummary(p).getLength
   }
 
   /** [[table]], followed by a small-input repartition when the file is an
@@ -60,9 +118,8 @@ object Fixtures {
     * For consumers whose per-row scan-stage work dominates the scan.
     */
   def tableParallel(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val path = s"$dir/$name.parquet"
-    val df = spark.read.parquet(path)
-    val bytes = inputBytes(path)
+    val df = table(spark, dir, name)
+    val bytes = inputBytes(spark, s"$dir/$name.parquet")
     val cores = spark.sparkContext.defaultParallelism
     val slices = math.min(cores.toLong, bytes / SmallInputPerTask).toInt
     if (bytes < SmallInputCeiling && slices >= 2) df.repartition(slices) else df

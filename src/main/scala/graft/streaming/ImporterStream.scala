@@ -2,10 +2,11 @@ package graft.streaming
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import graft.model.Schemas.ProcessedSchema
 import graft.operators.ImporterPipeline._
 
 /** Streaming shell for the importer pipeline (SURVEY.md §2.6): the same
@@ -66,15 +67,14 @@ object ImporterStream {
     val valid = validEvents(batch)
     val dead = deadLetters(batch)
 
+    // declared schema: the table grows every batch, and inferring it would
+    // cost a footer-reading Spark job per micro-batch; a directory with no
+    // data files yet reads as empty instead of failing inference
     val existing =
       if (Files.exists(Paths.get(sinks.processed)))
-        spark.read.parquet(sinks.processed)
+        spark.read.schema(ProcessedSchema).parquet(sinks.processed)
       else
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField(
-              "instance_id", org.apache.spark.sql.types.StringType))))
+        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], ProcessedSchema)
 
     val newInst = newInstanceEvents(valid, existing)
     // cache: newInst feeds three sinks; without it the anti-join against
