@@ -206,11 +206,14 @@ object Bench {
     var warmupOk = true
     var warmupError = ""
     try {
+      val baseTables = Seq("region", "nation", "customer", "supplier", "part", "orders",
+        "lineitem", "events", "documents", "embeddings")
+      // read as the queries read them: declared schemas, nanos-`ts` events
+      def baseTable(t: String) =
+        if (t == "events") graft.sources.Fixtures.events(spark, sfDir)
+        else graft.sources.Fixtures.table(spark, sfDir, t)
       spark.range(1000).selectExpr("sum(id)").count()
-      Seq("region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings").foreach { t =>
-        spark.read.parquet(s"$sfDir/$t.parquet").count()
-      }
+      baseTables.foreach(t => baseTable(t).count())
       // exercise the common codegen shapes (broadcast join, two-phase agg,
       // window, explode) on tiny data so the first timed query is not
       // charged their one-time JIT/codegen compilation
@@ -265,16 +268,14 @@ object Bench {
       // touching column pages — force one real columnar read per base
       // table so the first wide query (w1 ran 9.5x dispersed in round 9)
       // is not charged the corpus's first page-in
-      Seq("region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings").foreach { t =>
+      baseTables.foreach { t =>
         // .first(), NOT .count(): under count() the optimizer prunes the
         // unreferenced aggregate and the scan reads zero columns — the
         // warm-up must materialize the aggregate itself to fault pages
         // in. bit_xor, NOT sum: summing 64-bit hashes overflows ANSI
         // long arithmetic at sf0.1 (this line silently aborted the tail
         // of the warm-up for rounds — exactly what warmup_ok now flags)
-        spark.read.parquet(s"$sfDir/$t.parquet")
-          .selectExpr("bit_xor(xxhash64(struct(*)))").first()
+        baseTable(t).selectExpr("bit_xor(xxhash64(struct(*)))").first()
       }
       spark.catalog.clearCache()
     } catch {

@@ -17,6 +17,9 @@ import org.apache.spark.sql.functions._
   *     aggregations (A1/A5/S9), all keyed on `instance_id`-derived keys —
   *     the same partitioning, so AQE can reuse the exchange.
   *   - Nothing collects to the driver; all sinks are DataFrames.
+  *   - Streaming (`ImporterStream`): the dims → updates chain is derived
+  *     once per query and each micro-batch semi-joins it to its new
+  *     instances, so a batch no longer scans the dimensions source.
   */
 object ImporterPipeline {
 

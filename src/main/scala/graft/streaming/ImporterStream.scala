@@ -24,6 +24,16 @@ import graft.operators.ImporterPipeline._
   * `from_avro(value, schema)` (reference `schema/schema.go:7-26`); tests
   * drive the identical DAG with a MemoryStream — the pipeline only sees a
   * DataFrame of (file_url, instance_id).
+  *
+  * Static side lifetime: the dimension side (`dims` → valid → dedup →
+  * order lookup → update filter) is derived once per streaming query, on
+  * the first batch with new instances, and each batch semi-joins that
+  * snapshot down to its new instances ([[StaticSide]]). The snapshot is
+  * fixed for the query's life, just as a file-backed `dims` is already
+  * fixed by the file listing `spark.read` captured when the frame was
+  * built; a restart picks up new dimensions, and the checkpoint keeps the
+  * restart exactly once. Any failed batch drops the snapshot, so the next
+  * batch derives it again.
   */
 object ImporterStream {
 
@@ -35,8 +45,40 @@ object ImporterStream {
     val errors: String = s"$outDir/errors"
   }
 
-  /** One micro-batch: validate → anti-join processed → pipeline → sinks.
-    * Public so tests can drive a single batch synchronously.
+  /** One query's static side: every option update the dimensions yield,
+    * `optionUpdates(withOrder(dedupOptions(validDimensions(dims)), codeLists))`,
+    * derived on first use and materialized with `localCheckpoint()`.
+    * Filtering by instance after the dedup gives the same rows as before
+    * it: the order lookup is a left-outer join and the update filter works
+    * row by row.
+    *
+    * Derived lazily, not when the query starts: Catalyst may evaluate a
+    * local `dims` while planning, and a failure there must reach the
+    * batch's error handling, not escape `start`. No `persist`: a
+    * `CacheManager` entry would outlive the query and could be matched by
+    * other queries' plans.
+    */
+  final class StaticSide(dims: DataFrame, codeLists: DataFrame) {
+    private var snapshot: Option[DataFrame] = None
+
+    def get: DataFrame = synchronized {
+      snapshot.getOrElse {
+        val s = optionUpdates(withOrder(dedupOptions(validDimensions(dims)), codeLists),
+          enablePatchNodeId = true).localCheckpoint()
+        snapshot = Some(s)
+        s
+      }
+    }
+
+    /** Forget the snapshot, so the next [[get]] derives it again (a lost
+      * checkpoint block must not fail every later batch).
+      */
+    def drop(): Unit = synchronized { snapshot = None }
+  }
+
+  /** One micro-batch: validate → anti-join processed → the static side's
+    * updates for the new instances → sinks. Public so tests can drive a
+    * single batch synchronously.
     *
     * Sink contract: `updates`/`completed` are written to a
     * `run=<runNs>/batch_id=<id>` subdirectory with overwrite, so a
@@ -59,8 +101,7 @@ object ImporterStream {
   def processBatch(
       spark: SparkSession,
       batch: DataFrame,
-      dims: DataFrame,
-      codeLists: DataFrame,
+      side: StaticSide,
       sinks: Sinks,
       runNs: String,
       batchId: Long): Unit = {
@@ -92,9 +133,8 @@ object ImporterStream {
       // frames. Empty newInst is exactly that replay (or a genuinely
       // empty trigger, where there is nothing to write either way).
       if (!newInst.isEmpty) {
-        val forNew = dedupOptions(validDimensions(dims))
-          .join(newInst.select("instance_id"), Seq("instance_id"), "left_semi")
-        val updates = optionUpdates(withOrder(forNew, codeLists), enablePatchNodeId = true)
+        val updates = side.get
+          .join(broadcast(newInst.select("instance_id")), Seq("instance_id"), "left_semi")
 
         updates.write.mode("overwrite")
           .parquet(s"${sinks.updates}/run=$runNs/batch_id=$batchId")
@@ -112,6 +152,7 @@ object ImporterStream {
       // batch never wedges the consumer); the events stay out of
       // `processed`, so a later redelivery retries them.
       case scala.util.control.NonFatal(e) =>
+        side.drop()
         val error = s"${e.getClass.getName}: ${Option(e.getMessage).getOrElse("")}".take(512)
         try
           newInst
@@ -145,12 +186,13 @@ object ImporterStream {
       checkpoint: String): StreamingQuery = {
     val sinks = Sinks(outDir)
     val runNs = graft.operators.IngestRun.runId(spark, checkpoint)
+    val side = new StaticSide(dims, codeLists)
     eventsStream.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.ProcessingTime("1 second"))
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        processBatch(spark, batch, dims, codeLists, sinks, runNs, id)
+        processBatch(spark, batch, side, sinks, runNs, id)
       }
       .start()
   }

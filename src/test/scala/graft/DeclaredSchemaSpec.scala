@@ -97,7 +97,8 @@ class DeclaredSchemaSpec extends SparkSuite {
         .toDF("code_list_id", "code", "ord")
       val batch = Seq(("/a", "A")).toDF("file_url", "instance_id")
       ImporterStream.processBatch(spark,
-        batch, graft.operators.ImporterPipeline.projectDimensions(dims), codeLists,
+        batch, new ImporterStream.StaticSide(
+          graft.operators.ImporterPipeline.projectDimensions(dims), codeLists),
         sinks, "run1", 0L)
       assert(spark.read.parquet(sinks.processed).as[String].collect().toSeq === Seq("A"))
       assert(spark.read.parquet(sinks.completed).select("instance_id").as[String]

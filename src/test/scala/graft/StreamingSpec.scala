@@ -1,11 +1,13 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.LongAccumulator
 
 import graft.streaming.ImporterStream
 
@@ -160,6 +162,112 @@ class StreamingSpec extends SparkSuite {
   private def fixtureCodeLists =
     Seq(("myCodeList", "England", Some(0)), ("myCodeList", "Wales", Some(1)))
       .toDF("code_list_id", "code", "ord")
+
+  /** `dims` with each evaluated row counted in a fresh accumulator, so a
+    * spec sees when the static side is derived.
+    */
+  private def countedDims(dims: DataFrame): (DataFrame, LongAccumulator) = {
+    val acc = spark.sparkContext.longAccumulator
+    val counted = udf { (opt: String) => acc.add(1); opt }
+    (dims.withColumn("option", counted(col("option"))), acc)
+  }
+
+  test("the static dimension side is derived once per query, not once per micro-batch") {
+    import graft.operators.ImporterPipeline._
+    import graft.sources.Fixtures
+    val outDir = Files.createTempDirectory("static-once-out").toString
+    val ckpt = Files.createTempDirectory("static-once-ckpt").toString
+    val (dims, derived) = countedDims(projectDimensions(Fixtures.apiDimensions(spark, sf0001)))
+    val codeLists = Fixtures.codeLists(spark, sf0001)
+    // the fixture feed (duplicate deliveries and malformed events included)
+    // in a fixed shuffled order; batch 3 also redelivers batch 1's head
+    val events = new scala.util.Random(7).shuffle(
+      Fixtures.importerEvents(spark, sf0001).as[(String, String)].collect().toSeq.sorted)
+    val thirds = events.grouped((events.size + 2) / 3).toSeq
+    val batches = Seq(thirds(0), thirds(1), thirds(2) ++ thirds(0).take(3))
+
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[(String, String)]
+    val q = ImporterStream.start(spark, mem.toDF().toDF("file_url", "instance_id"),
+      dims, codeLists, outDir, ckpt)
+    val counted = try batches.map { b =>
+      mem.addData(b)
+      q.processAllAvailable()
+      derived.value
+    } finally q.stop()
+    assert(counted.head > 0, "batch 1 did not derive the static side")
+    assert(counted === Seq.fill(3)(counted.head), s"dims rows evaluated after each batch: $counted")
+
+    // each batch's updates equal the batch pipeline over its new instances
+    val written = spark.read.parquet(s"$outDir/updates")
+    val fresh = batches.map(_.collect { case (_, id) if id.nonEmpty => id }.distinct)
+      .scanLeft((Set.empty[String], Seq.empty[String])) { case ((seen, _), ids) =>
+        (seen ++ ids, ids.filterNot(seen))
+      }.tail.map(_._2)
+    val expectedRows = fresh.zipWithIndex.map { case (ids, i) =>
+      assert(ids.nonEmpty, s"batch $i has no new instance")
+      val expected = optionUpdates(
+        withOrder(dedupOptions(validDimensions(dims))
+          .join(ids.toDF("instance_id"), Seq("instance_id"), "left_semi"), codeLists),
+        enablePatchNodeId = true)
+      def rows(df: DataFrame) = df.select(expected.columns.map(col).toIndexedSeq: _*)
+        .collect().map(_.toString).toSeq.sorted
+      val want = rows(expected)
+      assert(rows(written.filter(col("batch_id") === i)) === want, s"batch $i")
+      want.size
+    }
+    assert(expectedRows.sum > 0, "no batch produced an update")
+  }
+
+  test("a failed batch drops the static side; the next batch derives it again") {
+    val outDir = Files.createTempDirectory("static-drop-out").toString
+    val ckpt = Files.createTempDirectory("static-drop-ckpt").toString
+    val parked = Files.createTempDirectory("static-drop-parked").resolve("run")
+    val (dims, derived) =
+      countedDims(graft.operators.ImporterPipeline.projectDimensions(fixtureDims))
+
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[(String, String)]
+    val q = ImporterStream.start(spark, mem.toDF().toDF("file_url", "instance_id"),
+      dims, fixtureCodeLists, outDir, ckpt)
+    try {
+      mem.addData(("/a", "A"))
+      q.processAllAvailable()
+      val afterFirst = derived.value
+      assert(afterFirst > 0, "batch 1 did not derive the static side")
+
+      // the snapshot exists; the query's updates target becomes a regular
+      // file, so the next batch fails at its first sink write
+      val run = Files.list(Paths.get(outDir, "updates")).iterator().asScala.toSeq
+        .filter(_.getFileName.toString.startsWith("run=")) match {
+        case Seq(r) => r
+        case other => fail(s"expected one run directory, got $other")
+      }
+      Files.move(run, parked)
+      Files.createFile(run)
+      mem.addData(("/b", "B"))
+      q.processAllAvailable()
+      assert(q.isActive, "a sink failure must not kill the stream")
+      val errs = spark.read.parquet(s"$outDir/errors")
+        .select("file_url", "instance_id", "err_context").as[(String, String, String)]
+        .collect().toSeq
+      assert(errs === Seq(("/b", "B", "failed to process instance batch")))
+      assert(derived.value === afterFirst, "the failing batch re-derived the static side")
+
+      // path fixed: the redelivered event derives the snapshot again
+      Files.delete(run)
+      Files.move(parked, run)
+      mem.addData(("/b", "B"))
+      q.processAllAvailable()
+      assert(derived.value > afterFirst, "the batch after a failure reused the dropped snapshot")
+    } finally q.stop()
+
+    def ids(table: String) = spark.read.parquet(s"$outDir/$table")
+      .select("instance_id").as[String].collect().toSeq.sorted
+    assert(ids("updates") === Seq("A", "B"), "redelivered events must land exactly once")
+    assert(ids("completed") === Seq("A", "B"))
+    assert(ids("processed_instances") === Seq("A", "B"))
+  }
 
   test("graceful drain flushes in-flight data; restart after drain adds no duplicates (ST5)") {
     val outDir = Files.createTempDirectory("drain-out").toString
@@ -1621,28 +1729,29 @@ class StreamingSpec extends SparkSuite {
     val outDir = Files.createTempDirectory("replay-out").toString
     val sinks = ImporterStream.Sinks(outDir)
     val dims = graft.operators.ImporterPipeline.projectDimensions(fixtureDims)
+    val side = new ImporterStream.StaticSide(dims, fixtureCodeLists)
     def updates() = spark.read.parquet(s"$outDir/updates")
       .select("instance_id").as[String].collect().toSeq.sorted
     val batchA = Seq(("/a", "A")).toDF("file_url", "instance_id")
 
-    ImporterStream.processBatch(spark, batchA, dims, fixtureCodeLists, sinks, "run1", 0L)
+    ImporterStream.processBatch(spark, batchA, side, sinks, "run1", 0L)
     assert(updates() === Seq("A"))
     // replay AFTER the processed write landed (crash before checkpoint
     // commit): every event is filtered by the anti-join — the batch's
     // committed output must survive, not be overwritten with emptiness
-    ImporterStream.processBatch(spark, batchA, dims, fixtureCodeLists, sinks, "run1", 0L)
+    ImporterStream.processBatch(spark, batchA, side, sinks, "run1", 0L)
     assert(updates() === Seq("A"), "already-processed replay wiped the batch output")
     // replay BEFORE the processed write landed (the partial-failure
     // window: updates written, completed/processed not): same (run, id)
     // REPLACES the partial directory — exactly once, not append
     val proc = java.nio.file.Paths.get(s"$outDir/processed_instances")
     Files.walk(proc).iterator().asScala.toSeq.reverse.foreach(p => Files.deleteIfExists(p))
-    ImporterStream.processBatch(spark, batchA, dims, fixtureCodeLists, sinks, "run1", 0L)
+    ImporterStream.processBatch(spark, batchA, side, sinks, "run1", 0L)
     assert(updates() === Seq("A"), "same-(run,id) replay appended duplicates")
     // a second stream life (fresh checkpoint → new run namespace, batch
     // ids restart at 0) adds to the shared sinks without clobbering
     val batchB = Seq(("/b", "B")).toDF("file_url", "instance_id")
-    ImporterStream.processBatch(spark, batchB, dims, fixtureCodeLists, sinks, "run2", 0L)
+    ImporterStream.processBatch(spark, batchB, side, sinks, "run2", 0L)
     assert(updates() === Seq("A", "B"), "new run namespace clobbered the old life")
   }
 
