@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import graft.sources.Fixtures
 import scala.collection.mutable
 
 /** Cross-process serialization of the graded runners. The round-8 driver
@@ -31,38 +32,69 @@ object RunnerLock {
 }
 
 object Bench {
-  /** The graded bench engine configuration. Shared with
-    * [[graft.tools.NprobeCurve]] so every committed measurement is taken
-    * under identical settings — a second hand-maintained copy of this
-    * block WILL drift.
+  /** AQE's coalesce floor. AQE coalescing keeps parallelism first
+    * (total/defaultParallelism), but floors the target at
+    * minPartitionSize — and the 1 MiB default is a constant tuned for
+    * multi-GB shuffles: every CPU-heavy reduce stage under ~32 MiB of
+    * shuffle bytes (the dedup posting-list pair emission, the minhash
+    * aggregation, the scoring joins) coalesced to ONE task and ran
+    * serially on a 32-core box (profiled r17: d3's pair stage 2.27 s in 1
+    * task over 1.8 MiB). Lowering the floor lets the scale-adaptive term
+    * decide; at cluster scale bytes/parallelism is far above either
+    * floor, so the setting is inert there (guide §2.2/§2.5 — derive
+    * partitioning from input size, not a constant).
+    */
+  private[graft] val MinCoalescedPartition = "16k"
+
+  /** The local core count a `SPARK_GRAFT_CPUS` value sets: 4 when unset,
+    * else a positive integer.
+    */
+  private[graft] def cpus(raw: Option[String]): Int =
+    raw.fold(4) { v =>
+      v.trim.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+        s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'"))
+    }
+
+  /** The queries a `SPARK_GRAFT_ONLY` value selects (comma-separated
+    * names, blanks around a name ignored): all of them when unset, else
+    * a non-empty set of [[SparkEntry.queries]] names.
+    */
+  private[graft] def only(raw: Option[String]): Option[Set[String]] =
+    raw.map { v =>
+      val names = v.split(",").map(_.trim).filter(_.nonEmpty).toSet
+      val unknown = (names -- SparkEntry.queries.keySet).toSeq.sorted
+      require(names.nonEmpty, s"SPARK_GRAFT_ONLY must name at least one query, got '$v'")
+      require(unknown.isEmpty, "SPARK_GRAFT_ONLY names queries not in SparkEntry.queries: " +
+        unknown.map(n => s"'$n'").mkString(", "))
+      names
+    }
+
+  /** The engine configuration, and the only place a `SparkSession` is
+    * built: every main ([[graft.Bench]], [[graft.Verify]], and the tools
+    * `PlanAudit`, `ExplainDump`, `QueryProfile`, `MaintBench`,
+    * `AmortizationTable`, `DensityBench`, `SkewBench`, `NprobeCurve`,
+    * `RefineCurve`), the test suite's shared session and the `perfbench`
+    * harness get it from here, so every measurement, oracle dump and test
+    * runs under identical settings — a second hand-maintained copy of
+    * this block WILL drift. Installs [[graft.plans.GraftExtensions]].
     */
   private[graft] def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Bench.cpus(sys.env.get("SPARK_GRAFT_CPUS"))
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .withExtensions(new graft.plans.GraftExtensions)
+      .config("spark.sql.shuffle.partitions", cpus.toLong)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // AQE coalescing keeps parallelism first (total/defaultParallelism),
-      // but floors the target at minPartitionSize — and the 1 MiB default
-      // is a constant tuned for multi-GB shuffles: every CPU-heavy reduce
-      // stage under ~32 MiB of shuffle bytes (the dedup posting-list pair
-      // emission, the minhash aggregation, the scoring joins) coalesced to
-      // ONE task and ran serially on a 32-core box (profiled r17: d3's
-      // pair stage 2.27 s in 1 task over 1.8 MiB). Lowering the floor lets
-      // the scale-adaptive term decide; at cluster scale bytes/parallelism
-      // is far above either floor, so the setting is inert there (guide
-      // §2.2/§2.5 — derive partitioning from input size, not a constant).
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_COALESCED_PARTITION", "16k"))
+      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", MinCoalescedPartition)
       .config("spark.sql.session.timeZone", "UTC")
       // the events table carries nanosecond timestamps; session-level
       // choice, not a per-query mutation (see RelationalOps.eventsTable)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       // keep catalog droppings (managed index tables, empty warehouse
-      // dirs) out of the launch CWD - same rule as the test suites.
+      // dirs) out of the launch CWD (the repo root, under tests).
       // Per-run UUID: a fixed path lets a killed prior JVM's orphaned
       // managed-table locations fail this run's CREATE TABLE AS with
       // LOCATION_ALREADY_EXISTS (in-memory catalog dies, location stays)
@@ -74,7 +106,7 @@ object Bench {
     // window even when the frame is a constant-size side table (see
     // TrainingPrep.packedChunks offsets). The harness captures only the last
     // ~2000 chars of output; round 3/4 records were nearly eaten by this
-    // spam, so drop that logger to ERROR for the bench run.
+    // spam, so drop that logger to ERROR.
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.sql.execution.window.WindowExec",
       org.apache.logging.log4j.Level.ERROR)
@@ -195,95 +227,13 @@ object Bench {
 
   def main(args: Array[String]): Unit = RunnerLock.withLock {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    // local-iteration hook; a bad name fails before the session starts
+    val only = Bench.only(sys.env.get("SPARK_GRAFT_ONLY"))
     val spark = session()
-    // Warm the session (codegen compiler, parquet footer caches, broadcast
-    // machinery) and touch EVERY base table once, so no timed query is
-    // charged one-time scan/footer init (f1_json_props used to absorb the
-    // events-table first-touch cost). A warm-up failure must not kill the
-    // bench, but it must be VISIBLE: `warmup_ok` rides in the record so a
-    // swallowed abort (whose first-touch costs then land in pass-0
-    // samples) can't masquerade as a clean run.
-    var warmupOk = true
-    var warmupError = ""
-    try {
-      val baseTables = Seq("region", "nation", "customer", "supplier", "part", "orders",
-        "lineitem", "events", "documents", "embeddings")
-      // read as the queries read them: declared schemas, nanos-`ts` events
-      def baseTable(t: String) =
-        if (t == "events") graft.sources.Fixtures.events(spark, sfDir)
-        else graft.sources.Fixtures.table(spark, sfDir, t)
-      spark.range(1000).selectExpr("sum(id)").count()
-      baseTables.foreach(t => baseTable(t).count())
-      // exercise the common codegen shapes (broadcast join, two-phase agg,
-      // window, explode) on tiny data so the first timed query is not
-      // charged their one-time JIT/codegen compilation
-      val a = spark.range(10000).selectExpr(
-        "id", "id % 7 AS k", "cast(id AS double) AS v", "array(id, id + 1) AS arr")
-      val dim = spark.range(7).selectExpr("id AS k", "cast(id AS string) AS s")
-      a.join(org.apache.spark.sql.functions.broadcast(dim), "k")
-        .groupBy("k").agg(org.apache.spark.sql.functions.sum("v").as("sv")).count()
-      a.selectExpr("k", "explode(arr) AS e").groupBy("k", "e").count().count()
-      a.selectExpr("k", "v",
-        "row_number() OVER (PARTITION BY k ORDER BY v) AS rn").where("rn <= 3").count()
-      // md5 → conv fixed-point hash chain (the t14/t26/t29 deterministic
-      // selection family) and the typed KMV aggregator path (a10/a11):
-      // both compile heavyweight codegen/encoder classes that otherwise
-      // land in the first such query's timed sample — a10 recorded 2.8x
-      // and t29 3.5x dispersion in round-10 driver runs, pure first-touch
-      a.selectExpr("cast(conv(substring(md5(concat(cast(id AS string), '|warm')), 1, 6)," +
-          " 16, 10) AS bigint) AS h")
-        .agg(org.apache.spark.sql.functions.sum("h")).first()
-      locally {
-        import spark.implicits._
-        import graft.functions.{KmvAgg, PortableHash}
-        spark.range(256)
-          .select(org.apache.spark.sql.functions.col("id").cast("string").as("s"))
-          .select((PortableHash.md5Prefix60(
-            org.apache.spark.sql.functions.col("s")) % PortableHash.P).as("x"))
-          .as[Long].map(x => ("w", x))
-          .groupByKey(_._1).mapValues(_._2)
-          .agg(new KmvAgg(KmvAgg.DefaultK).toColumn.name("mins"))
-          .toDF("g", "mins").count()
-      }
-      // the dimension-projection pipeline (nested-field explode +
-      // dropDuplicates) feeds ~a third of the suite; compile its codegen
-      // and fault its column pages in once so the first-visited consumers
-      // are not charged the one-time cost
-      SparkEntry.queries("a3_dedup_options")(spark, sfDir).count()
-      // Pre-build every memoized index artifact the *i twins read
-      // (shingle/segment tables, bigram-LM model, DSIR features, IVF+PQ
-      // vector index): IndexStore builds on FIRST USE, so without this
-      // the first index-fed query of pass 0 absorbs the whole build in
-      // its timed region — round 9 recorded d10i at 31.7x dispersion
-      // (min unaffected; the flag was pure first-touch). Build cost is
-      // real but belongs to the build queries' own amortization story
-      // (tools/AmortizationTable), not to a probe query's sample.
-      graft.operators.IndexStore.shingleTable(spark, sfDir)
-      graft.operators.IndexStore.lmModelPath(spark, sfDir)
-      graft.operators.IndexStore.nbModelPath(spark, sfDir)
-      graft.operators.IndexStore.dsirPath(spark, sfDir)
-      graft.operators.IndexStore.vectorPath(spark, sfDir)
-      graft.operators.IndexStore.clusterPath(spark, sfDir)
-      // a metadata-only count() can satisfy from parquet footers without
-      // touching column pages — force one real columnar read per base
-      // table so the first wide query (w1 ran 9.5x dispersed in round 9)
-      // is not charged the corpus's first page-in
-      baseTables.foreach { t =>
-        // .first(), NOT .count(): under count() the optimizer prunes the
-        // unreferenced aggregate and the scan reads zero columns — the
-        // warm-up must materialize the aggregate itself to fault pages
-        // in. bit_xor, NOT sum: summing 64-bit hashes overflows ANSI
-        // long arithmetic at sf0.1 (this line silently aborted the tail
-        // of the warm-up for rounds — exactly what warmup_ok now flags)
-        baseTable(t).selectExpr("bit_xor(xxhash64(struct(*)))").first()
-      }
-      spark.catalog.clearCache()
-    } catch {
-      case e: Throwable =>
-        warmupOk = false
-        warmupError = s"${e.getClass.getName}: ${Option(e.getMessage).getOrElse("")}"
-          .replaceAll("[\"\\\\\\n\\r\\t]", " ").take(300)
-    }
+    val warmupFailure = warmUp(spark, sfDir)
+    val warmupOk = warmupFailure.isEmpty
+    val warmupError =
+      warmupFailure.getOrElse("").replaceAll("[\"\\\\\\n\\r\\t]", " ").take(300)
 
     // ~20-40 ms parallel CPU-bound probe: co-located load inflates it in
     // proportion to stolen cores, which is the contention mode that
@@ -301,8 +251,6 @@ object Bench {
     val loadStart = loadavg()
     val sentinelPoints = mutable.ArrayBuffer(gate.ratio())
 
-    // local-iteration hook: comma-separated query names; unset = all
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     val fns = SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
     val names = fns.keys.toSeq.sorted
@@ -410,4 +358,92 @@ object Bench {
     println(s"""{"metric":"total","value":${f(total)},"unit":"sec","n_queries":${results.size},"n_failed":${failedNames.size},"warmup_ok":$warmupOk,"warmup_error":"$warmupError","max_dispersion":${f(maxDisp)},"max_sentinel":${f(maxSent)},"queries":${jmap(head)},"rest_sum":${f(restSum)}$failedRef$fullRef,$provenance,"sf":"$sfDir"}""")
     spark.stop()
   }
+
+  /** Warms the session (codegen compiler, parquet footer caches,
+    * broadcast machinery) and touches EVERY base table once, so no timed
+    * query is charged one-time scan/footer init (f1_json_props used to
+    * absorb the events-table first-touch cost). Returns the error that
+    * aborted it, if any: a warm-up failure must not kill the caller, but
+    * it must be VISIBLE — Bench puts it in the record as `warmup_ok` so
+    * a swallowed abort (whose first-touch costs then land in pass-0
+    * samples) can't masquerade as a clean run.
+    */
+  private[graft] def warmUp(spark: SparkSession, sfDir: String): Option[String] =
+    try {
+      val baseTables = Seq("region", "nation", "customer", "supplier", "part", "orders",
+        "lineitem", "events", "documents", "embeddings")
+      // read as the queries read them: declared schemas, nanos-`ts` events
+      def baseTable(t: String) =
+        if (t == "events") Fixtures.events(spark, sfDir)
+        else Fixtures.table(spark, sfDir, t)
+      spark.range(1000).selectExpr("sum(id)").count()
+      baseTables.foreach(t => baseTable(t).count())
+      // exercise the common codegen shapes (broadcast join, two-phase agg,
+      // window, explode) on tiny data so the first timed query is not
+      // charged their one-time JIT/codegen compilation
+      val a = spark.range(10000).selectExpr(
+        "id", "id % 7 AS k", "cast(id AS double) AS v", "array(id, id + 1) AS arr")
+      val dim = spark.range(7).selectExpr("id AS k", "cast(id AS string) AS s")
+      a.join(org.apache.spark.sql.functions.broadcast(dim), "k")
+        .groupBy("k").agg(org.apache.spark.sql.functions.sum("v").as("sv")).count()
+      a.selectExpr("k", "explode(arr) AS e").groupBy("k", "e").count().count()
+      a.selectExpr("k", "v",
+        "row_number() OVER (PARTITION BY k ORDER BY v) AS rn").where("rn <= 3").count()
+      // md5 → conv fixed-point hash chain (the t14/t26/t29 deterministic
+      // selection family) and the typed KMV aggregator path (a10/a11):
+      // both compile heavyweight codegen/encoder classes that otherwise
+      // land in the first such query's timed sample — a10 recorded 2.8x
+      // and t29 3.5x dispersion in round-10 driver runs, pure first-touch
+      a.selectExpr("cast(conv(substring(md5(concat(cast(id AS string), '|warm')), 1, 6)," +
+          " 16, 10) AS bigint) AS h")
+        .agg(org.apache.spark.sql.functions.sum("h")).first()
+      locally {
+        import spark.implicits._
+        import graft.functions.{KmvAgg, PortableHash}
+        spark.range(256)
+          .select(org.apache.spark.sql.functions.col("id").cast("string").as("s"))
+          .select((PortableHash.md5Prefix60(
+            org.apache.spark.sql.functions.col("s")) % PortableHash.P).as("x"))
+          .as[Long].map(x => ("w", x))
+          .groupByKey(_._1).mapValues(_._2)
+          .agg(new KmvAgg(KmvAgg.DefaultK).toColumn.name("mins"))
+          .toDF("g", "mins").count()
+      }
+      // the dimension-projection pipeline (nested-field explode +
+      // dropDuplicates) feeds ~a third of the suite; compile its codegen
+      // and fault its column pages in once so the first-visited consumers
+      // are not charged the one-time cost
+      SparkEntry.queries("a3_dedup_options")(spark, sfDir).count()
+      // Pre-build every memoized index artifact the *i twins read
+      // (shingle/segment tables, bigram-LM model, DSIR features, IVF+PQ
+      // vector index): IndexStore builds on FIRST USE, so without this
+      // the first index-fed query of pass 0 absorbs the whole build in
+      // its timed region — round 9 recorded d10i at 31.7x dispersion
+      // (min unaffected; the flag was pure first-touch). Build cost is
+      // real but belongs to the build queries' own amortization story
+      // (tools/AmortizationTable), not to a probe query's sample.
+      graft.operators.IndexStore.shingleTable(spark, sfDir)
+      graft.operators.IndexStore.lmModelPath(spark, sfDir)
+      graft.operators.IndexStore.nbModelPath(spark, sfDir)
+      graft.operators.IndexStore.dsirPath(spark, sfDir)
+      graft.operators.IndexStore.vectorPath(spark, sfDir)
+      graft.operators.IndexStore.clusterPath(spark, sfDir)
+      // a metadata-only count() can satisfy from parquet footers without
+      // touching column pages — force one real columnar read per base
+      // table so the first wide query (w1 ran 9.5x dispersed in round 9)
+      // is not charged the corpus's first page-in
+      baseTables.foreach { t =>
+        // .first(), NOT .count(): under count() the optimizer prunes the
+        // unreferenced aggregate and the scan reads zero columns — the
+        // warm-up must materialize the aggregate itself to fault pages
+        // in. bit_xor, NOT sum: summing 64-bit hashes overflows ANSI
+        // long arithmetic at sf0.1 (this line silently aborted the tail
+        // of the warm-up for rounds — exactly what warmup_ok now flags)
+        baseTable(t).selectExpr("bit_xor(xxhash64(struct(*)))").first()
+      }
+      spark.catalog.clearCache()
+      None
+    } catch {
+      case e: Throwable => Some(s"${e.getClass.getName}: ${Option(e.getMessage).getOrElse("")}")
+    }
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -12,32 +11,11 @@ object Verify {
     // lets data-dependent oracle generators (IVF centroid literals) find
     // the directory this verification run reads from
     System.setProperty("graft.sfdir", sfDir)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // the events table carries nanosecond timestamps; session-level
-      // choice, not a per-query mutation (see RelationalOps.eventsTable)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // keep catalog droppings (managed index tables, empty warehouse
-      // dirs) out of the launch CWD - same rule as the test suites.
-      // Per-run UUID: a fixed path lets a killed prior JVM's orphaned
-      // managed-table locations fail this run's CREATE TABLE AS with
-      // LOCATION_ALREADY_EXISTS (in-memory catalog dies, location stays)
-      .config("spark.sql.warehouse.dir",
-        s"${sys.props("java.io.tmpdir")}/graft-warehouse-${java.util.UUID.randomUUID().toString.take(8)}")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session()
     new java.io.File(outDir).mkdirs()
     // comma-separated query-name filter for local iteration (same contract
     // as Bench); the driver never sets it, so its runs stay exhaustive
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    val only = Bench.only(sys.env.get("SPARK_GRAFT_ONLY"))
     def selected(name: String): Boolean = only.forall(_.contains(name))
     SparkEntry.queries.filter(kv => selected(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")

@@ -12,8 +12,8 @@ import graft.functions.{DotProductF, GopherFracsExpr, Hilbert16, L2NormF, SimHas
   *
   * {{{
   * spark-submit --conf spark.sql.extensions=graft.plans.GraftExtensions ...
-  * // or in code, before the session exists:
-  * SparkSession.builder().withExtensions(new GraftExtensions) ...
+  * // or in code, on the session builder (as graft.Bench.session() does):
+  * builder.withExtensions(new GraftExtensions)
   * }}}
   *
   * Injects:
@@ -26,9 +26,10 @@ import graft.functions.{DotProductF, GopherFracsExpr, Hilbert16, L2NormF, SimHas
   *    `graft_dot_f`, `graft_l2norm_f`, `graft_hilbert16`,
   *    `graft_gopher_fracs`.
   *
-  * Sessions created without it still work: `TopKPerKey.apply` falls back
-  * to the runtime `experimental.extraStrategies` path idempotently, and
-  * the Column API wrappers build expressions directly.
+  * `graft.Bench.session()`, the one session every graft main and test
+  * uses, installs it. On a session created without it, `TopKPerKey.apply`
+  * fails at the call, naming this class; the Column API wrappers build
+  * their expressions directly and work on any session.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

@@ -3,7 +3,7 @@ package graft.plans
 import scala.collection.mutable
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{
   Ascending, Attribute, AttributeReference, AttributeSet, Descending, Expression,
@@ -33,7 +33,8 @@ import org.apache.spark.sql.types.IntegerType
   * Interface: [[TopKPerKey.apply]] — rank rows per key by `order`, keep the
   * first k, append a 1-based `rn` column (row_number semantics; supply a
   * total order via tie-break columns for determinism, exactly as with a
-  * window).
+  * window). The input's session must have [[GraftExtensions]] installed,
+  * which plans the node; `apply` fails at the call otherwise.
   */
 object TopKPerKey {
 
@@ -49,7 +50,9 @@ object TopKPerKey {
     require(!df.columns.exists(_.equalsIgnoreCase(rnName)),
       s"input already has a column named '$rnName' — pass a different rnName")
     val spark = df.sparkSession
-    register(spark)
+    require(Bridge.plannerStrategies(spark).contains(TopKPerKeyStrategy),
+      s"TopKPerKey needs ${classOf[GraftExtensions].getName} installed on the session " +
+        "(graft.Bench.session() installs it; or set spark.sql.extensions)")
 
     // Column trees carry lazily-converted node wrappers that only standard
     // Dataset operators resolve. Bare column references resolve directly to
@@ -85,23 +88,6 @@ object TopKPerKey {
     val rnAttr = AttributeReference(rnName, IntegerType, nullable = false)()
     Bridge.ofRows(spark, TopKPerKeyNode(keyAttrs, sortOrders, k, rnAttr, analyzed))
       .select((df.columns.toSeq :+ rnName).map(org.apache.spark.sql.functions.col): _*)
-  }
-
-  /** Idempotently add the planner strategy and optimizer rule to an
-    * existing session — `experimental.extraStrategies` /
-    * `extraOptimizations` are the public injection points usable after
-    * session construction. At builder time, prefer [[GraftExtensions]]
-    * (`spark.sql.extensions=graft.plans.GraftExtensions`), the standard
-    * deployment spelling; this runtime path exists so `TopKPerKey.apply`
-    * works on any session unconditionally.
-    */
-  def register(spark: SparkSession): Unit = {
-    if (!spark.experimental.extraStrategies.contains(TopKPerKeyStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKPerKeyStrategy
-    if (!spark.experimental.extraOptimizations.contains(PushFilterThroughTopK))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ PushFilterThroughTopK
   }
 }
 

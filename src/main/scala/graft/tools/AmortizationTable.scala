@@ -38,8 +38,8 @@ object AmortizationTable {
     import graft.operators.{Dedup, IvfAnn, ShingleIndex, TrainingPrep, VectorIndex}
     // warm the base tables so the first timed pass is not charged footer/
     // page-cache init (same rationale as the bench warm-up)
-    spark.read.parquet(s"$dir/documents.parquet").count()
-    spark.read.parquet(s"$dir/embeddings.parquet").count()
+    graft.sources.Fixtures.table(spark, dir, "documents").count()
+    graft.sources.Fixtures.table(spark, dir, "embeddings").count()
 
     val inline = Seq(
       "d3" -> minOf2(Dedup.ngramJaccardPairs(spark, dir).count()),

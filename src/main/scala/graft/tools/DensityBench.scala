@@ -29,7 +29,7 @@ object DensityBench {
     spark.sparkContext.setLogLevel("ERROR")
     import graft.operators.{Dedup, ShingleIndex}
 
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    val docs = graft.sources.Fixtures.table(spark, dir, "documents")
       .select(col("doc_id"), col("text")).localCheckpoint()
     def planted(modulo: Int, copies: Int, base: Long): DataFrame =
       docs.unionByName(

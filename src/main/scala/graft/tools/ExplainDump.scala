@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dumps formatted physical plans for selected queries — the plan-review
   * loop the 100 TB design stance requires (broadcasts where expected,
   * filters and pruning pushed into scans, wide codegen spans).
@@ -12,21 +10,7 @@ object ExplainDump {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val names = if (args.length > 1) args.drop(1).toSeq else Seq("flagship_updates")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      // the events table carries nanosecond timestamps (see
-      // RelationalOps.eventsTable)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // keep catalog droppings (managed index tables, empty warehouse
-      // dirs) out of the launch CWD - same rule as the test suites.
-      // Per-run UUID: a fixed path lets a killed prior JVM's orphaned
-      // managed-table locations fail this run's CREATE TABLE AS with
-      // LOCATION_ALREADY_EXISTS (in-memory catalog dies, location stays)
-      .config("spark.sql.warehouse.dir",
-        s"${sys.props("java.io.tmpdir")}/graft-warehouse-${java.util.UUID.randomUUID().toString.take(8)}")
-      .getOrCreate()
+    val spark = graft.Bench.session()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"========== $n ==========")

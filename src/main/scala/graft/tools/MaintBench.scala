@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.{ShingleIndex, TextAnalysis}
@@ -20,25 +19,19 @@ import graft.streaming.OnlineGate
   * docs/SCALING.md.
   *
   *   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_MAINT_K=8 \
-  *     sbt "runMain graft.tools.MaintBench"
+  *     SPARK_GRAFT_CPUS=8 sbt "runMain graft.tools.MaintBench"
   */
 object MaintBench {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val k = sys.env.getOrElse("SPARK_GRAFT_MAINT_K", "8").toInt
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        s"${sys.props("java.io.tmpdir")}/graft-maintbench-${java.util.UUID.randomUUID().toString.take(8)}")
-      .getOrCreate()
+    val spark = graft.Bench.session()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 
     val base = java.nio.file.Files.createTempDirectory("maintbench").toString
     val tbl = s"maintbench_idx_${java.util.UUID.randomUUID().toString.take(8)}"
-    val docs0 = spark.read.parquet(s"$dir/documents.parquet")
+    val docs0 = graft.sources.Fixtures.table(spark, dir, "documents")
       .select(col("doc_id"), col("text"))
     val nBase = docs0.count()
     // k copies, each with every token prefixed by a copy tag: identical

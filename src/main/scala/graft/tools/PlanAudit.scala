@@ -394,19 +394,7 @@ object PlanAudit {
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // keep catalog droppings (managed index tables, empty warehouse
-      // dirs) out of the launch CWD - same rule as the test suites.
-      // Per-run UUID: a fixed path lets a killed prior JVM's orphaned
-      // managed-table locations fail this run's CREATE TABLE AS with
-      // LOCATION_ALREADY_EXISTS (in-memory catalog dies, location stays)
-      .config("spark.sql.warehouse.dir",
-        s"${sys.props("java.io.tmpdir")}/graft-warehouse-${java.util.UUID.randomUUID().toString.take(8)}")
-      .getOrCreate()
+    val spark = graft.Bench.session()
     spark.sparkContext.setLogLevel("ERROR")
     val (findings, errors) = auditAll(spark, dir)
     findings.foreach(f => println(f.toString))

@@ -9,8 +9,8 @@ import scala.collection.mutable
   * optimization targets the stage that actually costs, not the one that
   * looks expensive in the plan.
   *
-  * Runs under the EXACT bench session (Bench.session()) so numbers are
-  * comparable to bench_full.json entries.
+  * Runs under the EXACT bench session and warm-up (Bench.session(),
+  * Bench.warmUp) so numbers are comparable to bench_full.json entries.
   *
   * Usage: SPARK_GRAFT_CPUS=32 sbt "runMain graft.tools.QueryProfile <sfDir> <query>..."
   */
@@ -20,20 +20,9 @@ object QueryProfile {
     val names = if (args.length > 1) args.drop(1).toSeq else Seq("g9_part_components")
     val spark = graft.Bench.session()
 
-    // same warm-up surface as the bench so first-touch costs don't land
-    // in the profiled query
-    Seq("region", "nation", "customer", "supplier", "part", "orders",
-        "lineitem", "events", "documents", "embeddings").foreach { t =>
-      spark.read.parquet(s"$dir/$t.parquet")
-        .selectExpr("bit_xor(xxhash64(struct(*)))").first()
-    }
-    graft.operators.IndexStore.shingleTable(spark, dir)
-    graft.operators.IndexStore.lmModelPath(spark, dir)
-    graft.operators.IndexStore.nbModelPath(spark, dir)
-    graft.operators.IndexStore.dsirPath(spark, dir)
-    graft.operators.IndexStore.vectorPath(spark, dir)
-    graft.operators.IndexStore.clusterPath(spark, dir)
-    spark.catalog.clearCache()
+    // the bench's warm-up, so first-touch costs don't land in the
+    // profiled query
+    graft.Bench.warmUp(spark, dir).foreach(e => println(s"warm-up failed: $e"))
 
     final case class StageRow(id: Int, name: String, ms: Long, tasks: Int,
         shufRead: Long, shufWrite: Long, input: Long, rows: Long)

@@ -36,6 +36,13 @@ object Bridge {
     case _ => None
   }
 
+  /** The strategies a session's planner runs, extension-injected ones
+    * included (`SessionState` is `private[sql]`).
+    */
+  def plannerStrategies(
+      spark: org.apache.spark.sql.SparkSession): Seq[org.apache.spark.sql.execution.SparkStrategy] =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.planner.strategies
+
   /** Build a DataFrame from a custom LogicalPlan (triggers analysis — the
     * standard entry point for library-defined logical operators;
     * `Dataset.ofRows` is `private[sql]` in Spark 4's classic module).

@@ -37,6 +37,32 @@ class ConfigFailFastSpec extends SparkSuite {
     }
   }
 
+  test("SPARK_GRAFT_CPUS: a bad value fails naming the variable and the value") {
+    assert(Bench.cpus(None) === 4)
+    assert(Bench.cpus(Some("8")) === 8)
+    assert(Bench.cpus(Some(" 2 ")) === 2)
+    for (bad <- Seq("abc", "0", "-4", "", "4.5")) {
+      val e = intercept[IllegalArgumentException](Bench.cpus(Some(bad)))
+      assert(e.getMessage.contains("SPARK_GRAFT_CPUS"), e.getMessage)
+      assert(e.getMessage.contains(s"'$bad'"), e.getMessage)
+    }
+  }
+
+  test("SPARK_GRAFT_ONLY: names are trimmed; an unknown name fails naming the variable and the name") {
+    assert(Bench.only(None) === None)
+    assert(Bench.only(Some("a3_dedup_options, flagship_updates")) ===
+      Some(Set("a3_dedup_options", "flagship_updates")))
+    assert(Bench.only(Some("flagship_updates,")) === Some(Set("flagship_updates")))
+    val e = intercept[IllegalArgumentException](
+      Bench.only(Some("a3_dedup_options,no_such_query")))
+    assert(e.getMessage.contains("SPARK_GRAFT_ONLY"), e.getMessage)
+    assert(e.getMessage.contains("'no_such_query'"), e.getMessage)
+    for (empty <- Seq("", " , ")) {
+      val e = intercept[IllegalArgumentException](Bench.only(Some(empty)))
+      assert(e.getMessage.contains("SPARK_GRAFT_ONLY"), e.getMessage)
+    }
+  }
+
   test("secrets are redacted from toString") {
     val cfg = GraftConfig.fromEnv(Map("SERVICE_AUTH_TOKEN" -> "sekrit")).toOption.get
     assert(!cfg.toString.contains("sekrit"))

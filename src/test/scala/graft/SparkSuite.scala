@@ -3,29 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for all suites (one JVM-wide session via
-  * getOrCreate; suites must not stop it).
+/** Shared local session for all suites: the engine's own
+  * [[Bench.session]] (one JVM-wide session via getOrCreate; suites must
+  * not stop it), so the tests run the configuration the bench measures.
   */
 trait SparkSuite extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    // the events table carries nanosecond timestamps (see
-    // RelationalOps.eventsTable)
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    // keep catalog/Derby droppings out of the repo working tree (the
-    // warehouse dir and derby.log otherwise land at CWD = repo root).
-    // Per-run UUID suffix: managed-table LOCATIONS outlive a killed JVM
-    // while the in-memory catalog does not, so a fixed path lets a
-    // crashed earlier run poison this one with LOCATION_ALREADY_EXISTS
-    // on the next CREATE TABLE AS (seen in round 12: a stale
-    // gate_rep_idx_bands/ failed an otherwise-green suite)
-    .config("spark.sql.warehouse.dir",
-      s"${sys.props("java.io.tmpdir")}/graft-test-warehouse-${java.util.UUID.randomUUID().toString.take(8)}")
-    .getOrCreate()
+  lazy val spark: SparkSession = Bench.session()
 
   def sf0001 = "/root/testdata/sf0.001"
 }

@@ -80,10 +80,9 @@ class TopKPerKeySpec extends SparkSuite {
         .withExtensions(new graft.plans.GraftExtensions)
         .getOrCreate()
       assert(s2 ne prior)
-      // build the logical node directly — NOT via TopKPerKey.apply, which
-      // would also register the runtime fallback and mask the extension.
-      // If the builder-time strategy were missing, planning throws
-      // "No plan for TopKPerKeyNode".
+      // build the logical node directly — NOT via TopKPerKey.apply, whose
+      // own extension check would fail first. If the builder-time strategy
+      // were missing, planning throws "No plan for TopKPerKeyNode".
       val df = s2.range(10).selectExpr("id % 3 AS k", "id AS v")
       val analyzed = df.queryExecution.analyzed
       val node = graft.plans.TopKPerKeyNode(
@@ -124,6 +123,31 @@ class TopKPerKeySpec extends SparkSuite {
         graft.functions.GopherUtil.fracs(
           org.apache.spark.unsafe.types.UTF8String.fromString("a b a b a b a b a b"))
           .toLongArray().toSeq)
+    } finally {
+      SparkSession.setDefaultSession(prior)
+      SparkSession.setActiveSession(prior)
+    }
+  }
+
+  test("the shared session is the bench session, extensions installed") {
+    assert(spark.sql("SELECT graft_hilbert16(7, 200)").head().getLong(0) ===
+      graft.functions.HilbertUtil.xy2d(7L, 200L))
+    assert(spark.conf.get("spark.sql.adaptive.coalescePartitions.minPartitionSize") ===
+      Bench.MinCoalescedPartition)
+  }
+
+  test("TopKPerKey.apply fails at the call on a session without GraftExtensions") {
+    import org.apache.spark.sql.SparkSession
+    val prior = spark // force the shared session into existence first
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    try {
+      val bare = SparkSession.builder().master("local[2]").getOrCreate()
+      assert(bare ne prior)
+      val df = bare.range(10).selectExpr("id % 3 AS k", "id AS v")
+      val e = intercept[IllegalArgumentException](
+        TopKPerKey(df, Seq(col("k")), Seq(col("v").desc), 2))
+      assert(e.getMessage.contains("graft.plans.GraftExtensions"), e.getMessage)
     } finally {
       SparkSession.setDefaultSession(prior)
       SparkSession.setActiveSession(prior)
