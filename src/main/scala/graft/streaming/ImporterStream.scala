@@ -1,7 +1,8 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -11,10 +12,12 @@ import graft.operators.ImporterPipeline._
 
 /** Streaming shell for the importer pipeline (SURVEY.md §2.6): the same
   * batch DAG applied per micro-batch under `foreachBatch`, with
-  *   - idempotency (ST1): stream-static anti-join against the accumulated
-  *     processed-instances table — the reference is at-most-once and relies
-  *     on its InstanceExists check; Spark is at-least-once, so the same
-  *     anti-join makes redelivery harmless.
+  *   - idempotency (ST1): each batch's events are anti-joined against the
+  *     query's in-memory set of processed instance ids ([[ProcessedIds]]),
+  *     the counterpart of the reference's per-event InstanceExists lookup.
+  *     The reference is at-most-once; Spark is at-least-once, so the
+  *     anti-join makes redelivery harmless. The `processed_instances`
+  *     table is the durable copy of the set.
   *   - dead-letter side output (ST4): invalid events appended to an errors
   *     table instead of being dropped.
   *   - multi-sink fan-out: updates + completed + errors parquet appends per
@@ -34,6 +37,13 @@ import graft.operators.ImporterPipeline._
   * built; a restart picks up new dimensions, and the checkpoint keeps the
   * restart exactly once. Any failed batch drops the snapshot, so the next
   * batch derives it again.
+  *
+  * Processed-instance lifetime: the same as the static side's. The first
+  * batch reads `processed_instances` once; each batch adds its ids after
+  * its `processed` append succeeds; any failed batch drops the set beside
+  * the static side, so the next batch reads the table again. Between
+  * failures the set equals the table as long as no other query appends to
+  * the same `processed_instances`; a restart reads the table.
   */
 object ImporterStream {
 
@@ -63,8 +73,10 @@ object ImporterStream {
 
     def get: DataFrame = synchronized {
       snapshot.getOrElse {
-        val s = optionUpdates(withOrder(dedupOptions(validDimensions(dims)), codeLists),
-          enablePatchNodeId = true).localCheckpoint()
+        val s = named(dims.sparkSession, "importer static side") {
+          optionUpdates(withOrder(dedupOptions(validDimensions(dims)), codeLists),
+            enablePatchNodeId = true).localCheckpoint()
+        }
         snapshot = Some(s)
         s
       }
@@ -74,6 +86,53 @@ object ImporterStream {
       * checkpoint block must not fail every later batch).
       */
     def drop(): Unit = synchronized { snapshot = None }
+  }
+
+  /** One query's processed-instance ids: the `processed` table read once,
+    * on the query's first batch, then extended in memory with the ids each
+    * batch marks. The batch's idempotency check tests against this set
+    * instead of listing and scanning the table, which gains a file every
+    * batch. The table stays the durable record, read again by the next
+    * query life and after any failed batch ([[drop]]).
+    */
+  final class ProcessedIds(path: String) {
+    private var snapshot: Option[Set[String]] = None
+
+    def get(spark: SparkSession): Set[String] = synchronized {
+      snapshot.getOrElse {
+        val p = new Path(path)
+        // Hadoop FileSystem, not java.nio: `outDir` may be a `file:`,
+        // `hdfs:` or `s3a:` URI. Declared schema: a directory with no data
+        // files yet reads as empty instead of failing inference.
+        val s =
+          if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
+            named(spark, "importer processed-instance seed") {
+              spark.read.schema(ProcessedSchema).parquet(path).collect().map(_.getString(0)).toSet
+            }
+          else Set.empty[String]
+        snapshot = Some(s)
+        s
+      }
+    }
+
+    /** Add the ids a batch has just appended to the table. */
+    def add(ids: Iterable[String]): Unit = synchronized { snapshot = snapshot.map(_ ++ ids) }
+
+    /** Forget the snapshot, so the next [[get]] reads the table again. */
+    def drop(): Unit = synchronized { snapshot = None }
+  }
+
+  /** Runs `body` with its Spark jobs described and their stages named
+    * `name` (job description and short call site), restoring the caller's
+    * values after.
+    */
+  private def named[T](spark: SparkSession, name: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val keys = Seq("spark.job.description", "callSite.short")
+    val saved = keys.map(sc.getLocalProperty)
+    keys.foreach(sc.setLocalProperty(_, name))
+    try body
+    finally keys.zip(saved).foreach { case (k, v) => sc.setLocalProperty(k, v) }
   }
 
   /** One micro-batch: validate → anti-join processed → the static side's
@@ -97,52 +156,64 @@ object ImporterStream {
     * `errors` sink stays append-per-delivery — duplicate error reports on
     * redelivery are harmless and match the reference's
     * report-then-commit consumer (message/kafka_message_receiver.go:44-50).
+    * Each sink gets one file per batch: the outputs are tens to hundreds
+    * of rows.
     */
   def processBatch(
       spark: SparkSession,
       batch: DataFrame,
       side: StaticSide,
+      processed: ProcessedIds,
       sinks: Sinks,
       runNs: String,
       batchId: Long): Unit = {
-    val valid = validEvents(batch)
-    val dead = deadLetters(batch)
+    // one partition: a batch is one trigger's intake, and on one partition
+    // the anti-join's distinct needs no shuffle
+    val events = batch.coalesce(1)
+    val valid = validEvents(events)
 
-    // declared schema: the table grows every batch, and inferring it would
-    // cost a footer-reading Spark job per micro-batch; a directory with no
-    // data files yet reads as empty instead of failing inference
-    val existing =
-      if (Files.exists(Paths.get(sinks.processed)))
-        spark.read.schema(ProcessedSchema).parquet(sinks.processed)
-      else
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], ProcessedSchema)
-
-    val newInst = newInstanceEvents(valid, existing)
-    // cache: newInst feeds three sinks; without it the anti-join against
-    // the growing processed table would run once per sink.
-    newInst.cache()
     // validation dead-letters first: they must reach the errors sink even
     // if the pipeline body below fails.
-    dead.write.mode("append").parquet(sinks.errors)
+    named(spark, "importer dead-letter sink") {
+      deadLetters(events).write.mode("append").parquet(sinks.errors)
+    }
+    // the batch's new events, collected to the driver (at most one
+    // trigger's intake, two short strings each); every sink below and the
+    // error report read this local relation
+    var fresh: Option[DataFrame] = None
     try {
+      val existing = spark.createDataFrame(
+        processed.get(spark).toSeq.map(Row(_)).asJava, ProcessedSchema)
+      val newInst = newInstanceEvents(valid, existing)
+      val rows = named(spark, "importer new events")(newInst.collect())
+      val newEvents = spark.createDataFrame(rows.toSeq.asJava, newInst.schema)
+      fresh = Some(newEvents)
       // NO new events → nothing to write, and CRITICALLY no overwrite: a
       // replay that lands after the processed write succeeded but before
       // the checkpoint committed re-enters here with every event filtered
       // by the anti-join, and an unconditional overwrite would WIPE the
       // batch's previously-written updates/completed output with empty
-      // frames. Empty newInst is exactly that replay (or a genuinely
+      // frames. No new events is exactly that replay (or a genuinely
       // empty trigger, where there is nothing to write either way).
-      if (!newInst.isEmpty) {
-        val updates = side.get
-          .join(broadcast(newInst.select("instance_id")), Seq("instance_id"), "left_semi")
+      if (rows.nonEmpty) {
+        val ids = rows.map(_.getAs[String]("instance_id"))
+        // a literal set, not a join: a broadcast of the ids would cost a job
+        val updates = side.get.where(col("instance_id").isin(ids.distinct.toIndexedSeq: _*))
 
-        updates.write.mode("overwrite")
-          .parquet(s"${sinks.updates}/run=$runNs/batch_id=$batchId")
-        completedEvents(newInst).write.mode("overwrite")
-          .parquet(s"${sinks.completed}/run=$runNs/batch_id=$batchId")
+        named(spark, "importer updates sink") {
+          updates.coalesce(1).write.mode("overwrite")
+            .parquet(s"${sinks.updates}/run=$runNs/batch_id=$batchId")
+        }
+        named(spark, "importer completed sink") {
+          completedEvents(newEvents).coalesce(1).write.mode("overwrite")
+            .parquet(s"${sinks.completed}/run=$runNs/batch_id=$batchId")
+        }
         // processed is written LAST: a failure anywhere above leaves the
         // events unmarked, so redelivery retries them (at-least-once).
-        newInst.select("instance_id").write.mode("append").parquet(sinks.processed)
+        named(spark, "importer processed sink") {
+          newEvents.select("instance_id").coalesce(1).write.mode("append").parquet(sinks.processed)
+        }
+        processed.add(ids)
       }
     } catch {
       // Reference message/kafka_message_receiver.go:44-50: ANY handler
@@ -153,27 +224,23 @@ object ImporterStream {
       // `processed`, so a later redelivery retries them.
       case scala.util.control.NonFatal(e) =>
         side.drop()
+        processed.drop()
         val error = s"${e.getClass.getName}: ${Option(e.getMessage).getOrElse("")}".take(512)
-        try
-          newInst
+        // without the new events (e.g. the processed table is unreadable),
+        // report the raw batch events so the failure is still visible
+        val (reported, context) = fresh match {
+          case Some(df) => (df, "failed to process instance batch")
+          case None => (valid, "failed to read processed-instances state")
+        }
+        named(spark, "importer error sink") {
+          reported
             .select(
               col("file_url"), col("instance_id"),
-              lit("failed to process instance batch").as("err_context"),
+              lit(context).as("err_context"),
               lit(error).as("error"))
-            .write.mode("append").parquet(sinks.errors)
-        catch {
-          // computing newInst itself is what failed (e.g. the processed
-          // table is unreadable): fall back to the raw batch events so the
-          // failure is still visible in the errors table.
-          case scala.util.control.NonFatal(_) =>
-            valid
-              .select(
-                col("file_url"), col("instance_id"),
-                lit("failed to read processed-instances state").as("err_context"),
-                lit(error).as("error"))
-              .write.mode("append").parquet(sinks.errors)
+            .coalesce(1).write.mode("append").parquet(sinks.errors)
         }
-    } finally newInst.unpersist()
+    }
   }
 
   /** Start the streaming query over an events stream DataFrame. */
@@ -187,12 +254,13 @@ object ImporterStream {
     val sinks = Sinks(outDir)
     val runNs = graft.operators.IngestRun.runId(spark, checkpoint)
     val side = new StaticSide(dims, codeLists)
+    val processed = new ProcessedIds(sinks.processed)
     eventsStream.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.ProcessingTime("1 second"))
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        processBatch(spark, batch, side, sinks, runNs, id)
+        processBatch(spark, batch, side, processed, sinks, runNs, id)
       }
       .start()
   }

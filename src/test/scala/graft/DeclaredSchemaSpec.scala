@@ -99,7 +99,7 @@ class DeclaredSchemaSpec extends SparkSuite {
       ImporterStream.processBatch(spark,
         batch, new ImporterStream.StaticSide(
           graft.operators.ImporterPipeline.projectDimensions(dims), codeLists),
-        sinks, "run1", 0L)
+        new ImporterStream.ProcessedIds(sinks.processed), sinks, "run1", 0L)
       assert(spark.read.parquet(sinks.processed).as[String].collect().toSeq === Seq("A"))
       assert(spark.read.parquet(sinks.completed).select("instance_id").as[String]
         .collect().toSeq === Seq("A"))

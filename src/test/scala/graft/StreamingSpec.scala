@@ -1,12 +1,16 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.util.LongAccumulator
 
 import graft.streaming.ImporterStream
@@ -17,8 +21,11 @@ import graft.streaming.ImporterStream
 class StreamingSpec extends SparkSuite {
   import spark.implicits._
 
-  test("micro-batches accumulate; duplicate instance in later batch is skipped") {
-    val outDir = Files.createTempDirectory("stream-out").toString
+  /** Two micro-batches, the second redelivering the first's instance,
+    * then a second query life redelivering both, into sinks under
+    * `outDir`, whose local directory is `localOut`.
+    */
+  private def accumulateAndSkipDuplicate(outDir: String, localOut: String): Unit = {
     val ckpt = Files.createTempDirectory("stream-ckpt").toString
 
     val dims = Seq(
@@ -43,6 +50,15 @@ class StreamingSpec extends SparkSuite {
       mem.addData(("/a", "A"), ("/b", "B"))
       q.processAllAvailable()
     } finally q.stop()
+    // a second query life reads the processed table from disk and skips
+    // both redelivered instances
+    val mem2 = MemoryStream[(String, String)]
+    val q2 = ImporterStream.start(spark, mem2.toDF().toDF("file_url", "instance_id"),
+      projected, codeLists, outDir, Files.createTempDirectory("stream-ckpt").toString)
+    try {
+      mem2.addData(("/a", "A"), ("/b", "B"))
+      q2.processAllAvailable()
+    } finally q2.stop()
 
     val updates = spark.read.parquet(s"$outDir/updates")
       .select("instance_id", "option").as[(String, String)].collect().toSeq
@@ -60,6 +76,19 @@ class StreamingSpec extends SparkSuite {
     val processed = spark.read.parquet(s"$outDir/processed_instances")
       .as[String].collect().toSeq.sorted
     assert(processed === Seq("A", "B"))
+    assert(Files.isDirectory(Paths.get(localOut, "processed_instances")))
+  }
+
+  test("micro-batches accumulate; duplicate instance in later batch is skipped") {
+    val outDir = Files.createTempDirectory("stream-out").toString
+    accumulateAndSkipDuplicate(outDir, outDir)
+  }
+
+  test("micro-batches accumulate; duplicate instance in later batch is skipped (file: URI output)") {
+    // a URI, not a plain path: the processed state must be found through
+    // Hadoop's FileSystem, or every batch sees an empty processed set
+    val local = Files.createTempDirectory("stream-out-uri")
+    accumulateAndSkipDuplicate(local.toUri.toString.stripSuffix("/"), local.toString)
   }
 
   test("file-source stream restarts from checkpoint without reprocessing (ST5)") {
@@ -179,11 +208,8 @@ class StreamingSpec extends SparkSuite {
     val ckpt = Files.createTempDirectory("static-once-ckpt").toString
     val (dims, derived) = countedDims(projectDimensions(Fixtures.apiDimensions(spark, sf0001)))
     val codeLists = Fixtures.codeLists(spark, sf0001)
-    // the fixture feed (duplicate deliveries and malformed events included)
-    // in a fixed shuffled order; batch 3 also redelivers batch 1's head
-    val events = new scala.util.Random(7).shuffle(
-      Fixtures.importerEvents(spark, sf0001).as[(String, String)].collect().toSeq.sorted)
-    val thirds = events.grouped((events.size + 2) / 3).toSeq
+    // batch 3 also redelivers batch 1's head
+    val thirds = feedChunks(seed = 7, n = 3)
     val batches = Seq(thirds(0), thirds(1), thirds(2) ++ thirds(0).take(3))
 
     implicit val sqlCtx = spark.sqlContext
@@ -225,6 +251,7 @@ class StreamingSpec extends SparkSuite {
     val parked = Files.createTempDirectory("static-drop-parked").resolve("run")
     val (dims, derived) =
       countedDims(graft.operators.ImporterPipeline.projectDimensions(fixtureDims))
+    val processedScans = new ScanCounter(ImporterStream.Sinks(outDir).processed)
 
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(String, String)]
@@ -260,13 +287,193 @@ class StreamingSpec extends SparkSuite {
       mem.addData(("/b", "B"))
       q.processAllAvailable()
       assert(derived.value > afterFirst, "the batch after a failure reused the dropped snapshot")
-    } finally q.stop()
+      assert(processedScans.take() === 1, "the batch after a failure did not re-read processed_instances")
+    } finally {
+      q.stop()
+      processedScans.close()
+    }
 
     def ids(table: String) = spark.read.parquet(s"$outDir/$table")
       .select("instance_id").as[String].collect().toSeq.sorted
     assert(ids("updates") === Seq("A", "B"), "redelivered events must land exactly once")
     assert(ids("completed") === Seq("A", "B"))
     assert(ids("processed_instances") === Seq("A", "B"))
+  }
+
+  /** Counts this session's queries that scan the table at `dir`, seen
+    * through a `QueryExecutionListener`. The listener bus is
+    * asynchronous, so [[take]] runs a marker query and waits for it: once
+    * it is reported, every earlier query has been.
+    */
+  private final class ScanCounter(dir: String) extends QueryExecutionListener with AutoCloseable {
+    private val Marker = "graft_scan_counter_marker"
+    private val reports = new LinkedBlockingQueue[String]()
+    spark.listenerManager.register(this)
+
+    private def scans(qe: QueryExecution) = qe.analyzed.collect { case l: LogicalRelation => l.relation }
+      .exists {
+        case h: HadoopFsRelation => h.location.rootPaths.exists(_.toUri.getPath.stripSuffix("/") == dir)
+        case _ => false
+      }
+    override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+      if (qe.analyzed.output.map(_.name) == Seq(Marker)) reports.put(Marker)
+      else if (scans(qe)) reports.put(dir)
+    override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit =
+      if (scans(qe)) reports.put(dir)
+
+    /** Scans of `dir` since the previous call. */
+    def take(): Int = {
+      spark.range(1).toDF(Marker).collect()
+      Iterator.continually(reports.poll(60, TimeUnit.SECONDS))
+        .takeWhile { r => assert(r != null, "marker query never reached the listener"); r != Marker }
+        .size
+    }
+
+    def close(): Unit = spark.listenerManager.unregister(this)
+  }
+
+  /** The fixture feed (duplicate deliveries and malformed events
+    * included) in a fixed shuffled order, cut into `n` chunks.
+    */
+  private def feedChunks(seed: Int, n: Int): Seq[Seq[(String, String)]] = {
+    val events = new scala.util.Random(seed).shuffle(
+      graft.sources.Fixtures.importerEvents(spark, sf0001).as[(String, String)].collect().toSeq.sorted)
+    events.grouped((events.size + n - 1) / n).toSeq
+  }
+
+  /** `.parquet` data files directly in `dir`. */
+  private def dataFiles(dir: java.nio.file.Path): Int =
+    Files.list(dir).iterator().asScala.count(_.getFileName.toString.endsWith(".parquet"))
+
+  test("processed-instance state is read from disk once per query, not once per micro-batch") {
+    import graft.operators.ImporterPipeline.projectDimensions
+    import graft.sources.Fixtures
+    val outDir = Files.createTempDirectory("state-once-out").toString
+    val sinks = ImporterStream.Sinks(outDir)
+    val chunks = feedChunks(seed = 5, n = 6)
+    // a previous query life marked the first chunk's instances
+    chunks.head.collect { case (_, id) if id.nonEmpty => id }.distinct.toDF("instance_id")
+      .write.parquet(sinks.processed)
+    val previousFiles = dataFiles(Paths.get(sinks.processed))
+    val batches = chunks.tail
+    val counter = new ScanCounter(sinks.processed)
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[(String, String)]
+    val q = ImporterStream.start(spark, mem.toDF().toDF("file_url", "instance_id"),
+      projectDimensions(Fixtures.apiDimensions(spark, sf0001)), Fixtures.codeLists(spark, sf0001),
+      outDir, Files.createTempDirectory("state-once-ckpt").toString)
+    val reads = try {
+      counter.take()
+      batches.map { b =>
+        mem.addData(b)
+        q.processAllAvailable()
+        counter.take()
+      }
+    } finally {
+      q.stop()
+      counter.close()
+    }
+    assert(batches.size >= 5)
+    assert(reads === 1 +: Seq.fill(batches.size - 1)(0), s"processed_instances scans per batch: $reads")
+
+    // the previous life's marks were honoured, and every instance landed once
+    val completed = spark.read.parquet(sinks.completed).select("instance_id").as[String].collect().toSeq
+    val marked = chunks.head.map(_._2).toSet
+    assert(completed.sorted === batches.flatten.collect {
+      case (_, id) if id.nonEmpty && !marked(id) => id }.distinct.sorted)
+
+    // one data file per sink per batch
+    for (sink <- Seq(sinks.updates, sinks.completed)) {
+      val batchDirs = Files.walk(Paths.get(sink)).iterator().asScala
+        .filter(_.getFileName.toString.startsWith("batch_id=")).toSeq
+      assert(batchDirs.nonEmpty, sink)
+      batchDirs.foreach(d => assert(dataFiles(d) === 1, d))
+    }
+    val batchesWithNew = Files.walk(Paths.get(sinks.completed)).iterator().asScala
+      .count(_.getFileName.toString.startsWith("batch_id="))
+    assert(dataFiles(Paths.get(sinks.processed)) === previousFiles + batchesWithNew)
+    assert(dataFiles(Paths.get(sinks.errors)) <= batches.size)
+  }
+
+  test("a sink failing on k consecutive deliveries: outputs equal a fault-free run, k error rows per event") {
+    import graft.operators.ImporterPipeline.projectDimensions
+    import graft.sources.Fixtures
+    val chunks = feedChunks(seed = 13, n = 4)
+    // batch 1 is delivered k + 1 times; the first k deliveries meet a
+    // broken updates sink
+    val k = 2
+    val deliveries = Seq(chunks(0)) ++ Seq.fill(k + 1)(chunks(1)) ++ chunks.drop(2)
+    val failing = 1 to k
+
+    /** Runs the deliveries into a fresh output directory, with the query's
+      * updates run directory replaced by a regular file during `failing`;
+      * returns the directory and the processed_instances scans per batch.
+      */
+    def run(faults: Boolean): (String, Seq[Int]) = {
+      val outDir = Files.createTempDirectory("fault-out").toString
+      val counter = new ScanCounter(ImporterStream.Sinks(outDir).processed)
+      val parked = Files.createTempDirectory("fault-parked").resolve("run")
+      implicit val sqlCtx = spark.sqlContext
+      val mem = MemoryStream[(String, String)]
+      val q = ImporterStream.start(spark, mem.toDF().toDF("file_url", "instance_id"),
+        projectDimensions(Fixtures.apiDimensions(spark, sf0001)), Fixtures.codeLists(spark, sf0001),
+        outDir, Files.createTempDirectory("fault-ckpt").toString)
+      def runDir = Files.list(Paths.get(outDir, "updates")).iterator().asScala.toSeq
+        .filter(_.getFileName.toString.startsWith("run=")) match {
+        case Seq(r) => r
+        case other => fail(s"expected one run directory, got $other")
+      }
+      try {
+        counter.take()
+        val reads = deliveries.zipWithIndex.map { case (d, i) =>
+          if (faults && i == failing.head) {
+            val r = runDir
+            Files.move(r, parked)
+            Files.createFile(r)
+          }
+          if (faults && i == failing.last + 1) {
+            val r = runDir
+            Files.delete(r)
+            Files.move(parked, r)
+          }
+          mem.addData(d)
+          q.processAllAvailable()
+          assert(q.isActive, "a sink failure must not kill the stream")
+          counter.take()
+        }
+        (outDir, reads)
+      } finally {
+        q.stop()
+        counter.close()
+      }
+    }
+
+    val (clean, cleanReads) = run(faults = false)
+    val (faulty, faultyReads) = run(faults = true)
+    assert(cleanReads === Seq.fill(deliveries.size)(0), "a fault-free run re-read processed_instances")
+    // each failure drops the snapshot: the next delivery reads the table
+    assert(faultyReads === deliveries.indices.map(i => if (failing.contains(i - 1)) 1 else 0),
+      s"processed_instances scans per batch: $faultyReads")
+
+    def rows(outDir: String, table: String) = {
+      val df = spark.read.parquet(s"$outDir/$table")
+      df.select(df.columns.filterNot(Set("run", "batch_id")).map(col).toIndexedSeq: _*)
+        .collect().map(_.toString).toSeq.sorted
+    }
+    for (table <- Seq("updates", "completed", "processed_instances"))
+      assert(rows(faulty, table) === rows(clean, table), s"$table differs from the fault-free run")
+    val failure = "failed to process instance batch"
+    def errors(outDir: String) = spark.read.parquet(s"$outDir/errors")
+      .select("file_url", "instance_id", "err_context").as[(String, String, String)].collect().toSeq
+    assert(errors(faulty).filter(_._3 != failure).sorted === errors(clean).sorted)
+    assert(errors(clean).forall(_._3 != failure))
+
+    // exactly k failure rows per event the failing deliveries carried new
+    val affected = spark.read.parquet(s"$clean/completed").filter(col("batch_id") === failing.head)
+      .select("file_url", "instance_id").as[(String, String)].collect().toSeq
+    assert(affected.nonEmpty, "the failing deliveries carried no new event")
+    val failed = errors(faulty).filter(_._3 == failure).map(e => (e._1, e._2))
+    assert(failed.groupBy(identity).map { case (e, n) => e -> n.size } === affected.map(_ -> k).toMap)
   }
 
   test("graceful drain flushes in-flight data; restart after drain adds no duplicates (ST5)") {
@@ -1730,28 +1937,34 @@ class StreamingSpec extends SparkSuite {
     val sinks = ImporterStream.Sinks(outDir)
     val dims = graft.operators.ImporterPipeline.projectDimensions(fixtureDims)
     val side = new ImporterStream.StaticSide(dims, fixtureCodeLists)
+    // a replay after a crash is a new query life: it starts with no
+    // processed-instance snapshot and reads the table
+    def restarted() = new ImporterStream.ProcessedIds(sinks.processed)
     def updates() = spark.read.parquet(s"$outDir/updates")
       .select("instance_id").as[String].collect().toSeq.sorted
     val batchA = Seq(("/a", "A")).toDF("file_url", "instance_id")
 
-    ImporterStream.processBatch(spark, batchA, side, sinks, "run1", 0L)
+    ImporterStream.processBatch(spark, batchA, side, restarted(), sinks, "run1", 0L)
     assert(updates() === Seq("A"))
     // replay AFTER the processed write landed (crash before checkpoint
     // commit): every event is filtered by the anti-join — the batch's
     // committed output must survive, not be overwritten with emptiness
-    ImporterStream.processBatch(spark, batchA, side, sinks, "run1", 0L)
+    ImporterStream.processBatch(spark, batchA, side, restarted(), sinks, "run1", 0L)
     assert(updates() === Seq("A"), "already-processed replay wiped the batch output")
     // replay BEFORE the processed write landed (the partial-failure
     // window: updates written, completed/processed not): same (run, id)
     // REPLACES the partial directory — exactly once, not append
     val proc = java.nio.file.Paths.get(s"$outDir/processed_instances")
     Files.walk(proc).iterator().asScala.toSeq.reverse.foreach(p => Files.deleteIfExists(p))
-    ImporterStream.processBatch(spark, batchA, side, sinks, "run1", 0L)
+    ImporterStream.processBatch(spark, batchA, side, restarted(), sinks, "run1", 0L)
     assert(updates() === Seq("A"), "same-(run,id) replay appended duplicates")
+    // the replay ran the write path, not a skip on a stale snapshot
+    assert(spark.read.parquet(sinks.processed).as[String].collect().toSeq === Seq("A"),
+      "the replay did not re-mark A as processed")
     // a second stream life (fresh checkpoint → new run namespace, batch
     // ids restart at 0) adds to the shared sinks without clobbering
     val batchB = Seq(("/b", "B")).toDF("file_url", "instance_id")
-    ImporterStream.processBatch(spark, batchB, side, sinks, "run2", 0L)
+    ImporterStream.processBatch(spark, batchB, side, restarted(), sinks, "run2", 0L)
     assert(updates() === Seq("A", "B"), "new run namespace clobbered the old life")
   }
 
