@@ -171,8 +171,8 @@ object SparkEntry {
     "g7_part_triangles" -> ((s: SparkSession, d: String) =>
       RelationalOps.partTriangles(s, d)),
     // connected components on g7's co-purchase graph via alternating
-    // large/small-star rounds — O(log n) convergence where d8's label
-    // propagation needs O(diameter); recursive-CTE oracle
+    // large/small-star rounds — O(log n) convergence, the same operator
+    // d8 clusters with; recursive-CTE oracle
     "g9_part_components" -> ((s: SparkSession, d: String) =>
       graft.operators.GraphOps.partComponents(s, d)),
     // nested IN-subquery chain with a grouped HAVING gate (Q20 shape)

@@ -365,17 +365,12 @@ object Dedup {
   /** Duplicate clusters: connected components over the near-duplicate pair
     * graph (transitively: if a~b and b~c, all three are one duplicate
     * group, even when a~c alone is below threshold — the standard corpus-
-    * dedup semantics). Min-label propagation, converging in O(component
-    * diameter) rounds. The first `unrolledRounds` rounds run as ONE lazy
-    * DAG (near-dup components are tiny in practice, so this is almost
-    * always the whole computation) with a single materialization and a
-    * fixpoint check; only a diameter larger than `unrolledRounds` falls
-    * back to checkpoint-per-round looping.
+    * dedup semantics). Each document is labelled with its cluster's
+    * minimum doc id; see [[clustersFromPairs]].
     */
   def duplicateClusters(
-      spark: SparkSession, dir: String, threshold: Double = DefaultThreshold,
-      unrolledRounds: Int = 3): DataFrame =
-    clustersFromPairs(ngramJaccardPairs(spark, dir, threshold), unrolledRounds)
+      spark: SparkSession, dir: String, threshold: Double = DefaultThreshold): DataFrame =
+    clustersFromPairs(ngramJaccardPairs(spark, dir, threshold))
 
   /** d17: the near-duplicate cluster SIZE DISTRIBUTION — the measurement
     * that sizes the dedup decision itself (how much of the corpus sits in
@@ -389,79 +384,17 @@ object Dedup {
     clusters.groupBy(col("cluster_id")).agg(count(lit(1)).as("cluster_size"))
       .groupBy(col("cluster_size")).agg(count(lit(1)).as("n_clusters"))
 
-  /** The clustering engine over an arbitrary near-duplicate pair frame
-    * (`a`, `b` doc-id columns) — the seam that lets the graded query feed
-    * from [[ShingleIndex]]'s amortized pairs instead of re-shingling the
-    * corpus, and production callers plug in any pair generator (SimHash,
-    * embedding near-dups) with the same transitive-closure semantics.
+  /** `(doc_id, cluster_id)` labels for an arbitrary near-duplicate pair
+    * frame (`a`, `b` doc-id columns): [[GraphOps.connectedComponents]]
+    * with the dedup family's column names. The seam that lets the graded
+    * query feed from [[ShingleIndex]]'s amortized pairs instead of
+    * re-shingling the corpus, and lets production callers plug in any
+    * pair generator (SimHash, embedding near-dups) with the same
+    * transitive-closure semantics.
     */
-  private[graft] def clustersFromPairs(
-      pairsIn: DataFrame, unrolledRounds: Int = 3): DataFrame = {
-    // the chain below is r1 + (2 until k) + final step ⇒ 2 rounds minimum;
-    // fail loudly rather than silently unrolling more than asked
-    require(unrolledRounds >= 2, s"unrolledRounds must be >= 2, got $unrolledRounds")
-    // Cache the PAIRS leaf, not a union over it: unionAll eagerly flattens
-    // nested Unions (CombineUnions), so a cached Union(pairs, swap)
-    // subtree disappears from any wider union built on top of it and
-    // every scan site silently recomputes the expensive pair generation.
-    // A cached leaf survives inside every union branch.
-    val pairs = pairsIn.select(col("a"), col("b")).cache()
-    pairs.count() // fill before the multi-branch plan below races the cache
-    // Self-loop formulation: with (x, x) edges in the set, "min over
-    // neighbor labels" already includes the node's own label, so a round
-    // is ONE join + aggregate referencing the label table once — the
-    // least(own, neighbors) outer-join form references it twice and the
-    // unrolled plan would double per round (2^k subtrees). Duplicate
-    // edges are harmless under min. (Caching this union instead of the
-    // pairs leaf was measured SLOWER — the InMemoryRelation breaks the
-    // codegen span above every round's scan.)
-    val eSelf = pairs
-      .unionAll(pairs.select(col("b").as("a"), col("a").as("b")))
-      .unionAll(pairs.select(col("a"), col("a").as("b")))
-      .unionAll(pairs.select(col("b").as("a"), col("b")))
-    def round(labels: DataFrame): DataFrame =
-      eSelf.join(labels, eSelf("b") === labels("id"))
-        .groupBy(eSelf("a").as("id")).agg(min(col("lbl")).as("lbl"))
-    // One full round against `plbl`-named previous labels, keeping a
-    // changed flag. Inner join is total: the self-loop guarantees every
-    // id survives as a source.
-    def step(prevR: DataFrame): DataFrame = {
-      val neigh = eSelf.join(prevR, eSelf("b") === prevR("id"))
-        .groupBy(eSelf("a").as("id")).agg(min(col("plbl")).as("lbl"))
-      neigh.join(prevR, Seq("id"))
-        .select(
-          col("id"), col("lbl").as("nxt"),
-          (col("lbl") < col("plbl")).as("changed"))
-    }
-    // Near-dup components are tiny in practice (diameter 2-3), so unroll
-    // the first rounds into ONE lazy DAG and materialize once. Round 1
-    // needs no label table at all — label(x) = x initially, so it is just
-    // the min neighbor id. The last round carries the changed flag:
-    // labels decrease monotonically, so "round k changed nothing" IS the
-    // fixpoint, checked by one cheap scan of the materialized blocks.
-    val r1 = eSelf.groupBy(col("a").as("id")).agg(min(col("b")).as("lbl"))
-    val prev = (2 until unrolledRounds).foldLeft(r1)((l, _) => round(l))
-      .select(col("id"), col("lbl").as("plbl"))
-    // cache (not localCheckpoint): the fill and the convergence count are
-    // then ONE job — count(changed) both materializes the round and reads
-    // the flag — and the lineage stays recomputable after unpersist. On a
-    // real cluster with MANY fallback rounds prefer reliable checkpoint()
-    // to bound lineage growth; the unrolled fast path never grows it.
-    var mat = step(prev).cache()
-    var changed = mat.filter(col("changed")).count()
-    // Rare fallback (diameter > unrolledRounds): resume the loop from the
-    // materialized labels.
-    var iter = 0
-    while (changed > 0 && iter < 20) {
-      val next = step(mat.select(col("id"), col("nxt").as("plbl"))).cache()
-      changed = next.filter(col("changed")).count()
-      mat.unpersist()
-      mat = next
-      iter += 1
-    }
-    pairs.unpersist()
-    mat.select(col("id").as("doc_id"), col("nxt").as("cluster_id"))
-  }
+  private[graft] def clustersFromPairs(pairs: DataFrame): DataFrame =
+    GraphOps.connectedComponents(pairs)
+      .select(col("id").as("doc_id"), col("component").as("cluster_id"))
 
   /** SimHash signatures via the custom codegen expression — one pass per
     * document, no shingle explosion.

@@ -4,18 +4,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Connected components by alternating large-star / small-star rounds
-  * (Kiveris et al. 2014, "Connected Components in MapReduce and Beyond").
-  *
-  * The engine already labels components once — [[Dedup.clustersFromPairs]]
-  * propagates min labels along edges, one round per hop, which is ideal
-  * for near-duplicate clusters (diameter 2-3, the common case measured
-  * there). This operator is the complementary algorithm for graphs whose
-  * diameter is NOT small: each large-star round hangs every node's larger
+  * (Kiveris et al. 2014, "Connected Components in MapReduce and Beyond"),
+  * the engine's one connected-components algorithm: d8's near-duplicate
+  * clusters ([[Dedup.clustersFromPairs]]) and g9's co-purchase components
+  * both run on it. Each large-star round hangs every node's larger
   * neighbors directly off its local minimum and each small-star round
   * re-points the smaller ones, so distances to the component root fall
-  * geometrically — O(log n) rounds on a CHAIN where label propagation
-  * needs O(n). A crawl's link graph or a co-purchase graph at 100 TB has
-  * exactly those long filaments; 2^45 nodes still converge in ~45 rounds.
+  * geometrically — O(log n) rounds even on a CHAIN, and a near-duplicate
+  * graph (diameter 2-3) converges in a round or two after the union-find
+  * prologue.
   *
   * Scale shape per round: two groupBy(min) aggregations (map-side
   * partial-combined) and ONE terminal distinct over an edge set that only
@@ -23,7 +20,9 @@ import org.apache.spark.sql.functions._
   * no windows, no driver-side adjacency. Convergence costs one
   * map-side-combined checksum aggregate per round — fused into the same
   * job that materializes the round via a LAZY localCheckpoint — plus a
-  * single exact set-difference confirm at the detected fixpoint.
+  * single exact set-difference confirm at the detected fixpoint. Every
+  * stage is named `connected components …` (input, round k, confirm,
+  * labels), so a profile shows how many rounds a query took.
   */
 object GraphOps {
 
@@ -32,8 +31,20 @@ object GraphOps {
     * its component's minimum vertex id. Output: `(id, component)`.
     */
   def connectedComponents(edgesIn: DataFrame, maxIter: Int = 50): DataFrame = {
+    val sess = edgesIn.sparkSession
+    import sess.implicits._
+    // every job (and, under AQE, the shuffle map stages a localCheckpoint
+    // runs when it builds its RDD) is named for the step that starts it
+    def job[T](name: String)(body: => T): T =
+      graft.SparkJobs.named(sess, s"connected components $name")(body)
+    // LAZY localCheckpoint: the union-find prologue and the vertex table
+    // both read the edges, and every caller passes a derived edge set
+    // (co-purchase or Jaccard pairs) whose pipeline would otherwise run
+    // twice — the second time at the terminal label join. The first
+    // round's job fills the cut; the label job reads it back.
+    val edges = job("input")(edgesIn.select(col("a"), col("b")).localCheckpoint(eager = false))
     // canonical large→small orientation; self-loops carry no connectivity
-    val canon = edgesIn
+    val canon = edges
       .select(greatest(col("a"), col("b")).as("a"), least(col("a"), col("b")).as("b"))
       .filter(col("a") =!= col("b")).distinct()
 
@@ -50,8 +61,6 @@ object GraphOps {
     // hash-aggregate over that partition would need; partition count, not
     // corpus size, bounds it. This is the one deliberate mapPartitions in
     // the graph family: union-find is genuinely per-partition imperative.
-    val sess = edgesIn.sparkSession
-    import sess.implicits._
     val contracted = canon
       .select(col("a").cast("long"), col("b").cast("long")).as[(Long, Long)]
       .mapPartitions { it =>
@@ -74,10 +83,9 @@ object GraphOps {
       }
       .toDF("a", "b")
 
-    // vertices captured up front — star rounds rewrite edges, and a
+    // vertices from the input edges — star rounds rewrite edges, and a
     // root's own row disappears from the `a` side at the fixpoint
-    val verts = edgesIn
-      .select(explode(array(col("a"), col("b"))).as("id")).distinct().cache()
+    val verts = edges.select(explode(array(col("a"), col("b"))).as("id")).distinct()
 
     // large-star: every node u hangs its LARGER neighbors off
     // m(u) = min(N(u) ∪ {u}); m ≤ u < v keeps the orientation canonical.
@@ -132,25 +140,28 @@ object GraphOps {
         if (r.isNullAt(2)) 0L else r.getLong(2))
     }
     // LAZY local checkpoint: still truncates the logical plan (the
-    // eager/exponential-lineage rationale above), but defers
-    // materialization to the probe's aggregate — so each round is ONE
-    // Spark job (compute + checkpoint + checksum together) instead of a
-    // checkpoint job followed by a probe job. Measured round 14 at
-    // sf0.1: the per-round fixed stage overhead is the dominant cost, so
-    // halving jobs-per-round beats halving probe frequency (probing
-    // every 2nd round was tried and LOST — the extra star rounds past
-    // the fixpoint cost more than the 1-stage probes they save).
-    var cur = contracted.localCheckpoint(eager = false)
-    var curSig = probe(cur)
+    // eager/exponential-lineage rationale above), but defers the round's
+    // final stage to the probe's aggregate — so the checkpoint costs no
+    // job of its own (AQE still runs the round's shuffle map stages when
+    // localCheckpoint builds the RDD). Measured round 14 at sf0.1: the
+    // per-round fixed stage overhead is the dominant cost, so halving
+    // jobs-per-round beats halving probe frequency (probing every 2nd
+    // round was tried and LOST — the extra star rounds past the fixpoint
+    // cost more than the 1-stage probes they save).
+    def round(k: Int, e: DataFrame): (DataFrame, (Long, Long, Long)) =
+      job(s"round $k") {
+        val cut = e.localCheckpoint(eager = false)
+        (cut, probe(cut))
+      }
+    var (cur, curSig) = round(0, contracted)
     var converged = curSig._1 == 0L
     var iter = 0
     while (!converged && iter < maxIter) {
-      val next = smallStar(largeStar(cur)).localCheckpoint(eager = false)
-      val nextSig = probe(next)
+      val (next, nextSig) = round(iter + 1, smallStar(largeStar(cur)))
       // both sides are distinct sets: equal checksums gate the one
       // exact equality check (equal size + empty difference ⇒ equal)
       converged = nextSig == curSig &&
-        next.exceptAll(cur).limit(1).count() == 0L
+        job("confirm")(next.exceptAll(cur).limit(1).count()) == 0L
       cur = next
       curSig = nextSig
       iter += 1
@@ -158,12 +169,12 @@ object GraphOps {
     require(converged, s"star rounds did not converge in $maxIter iterations")
     // fixpoint: every non-root points straight at its root; roots appear
     // only on the `b` side, so they label themselves
-    val out = verts.join(cur, verts("id") === cur("a"), "left")
-      .groupBy(col("id"))
-      .agg(min(coalesce(col("b"), col("id"))).as("component"))
-      .localCheckpoint()
-    verts.unpersist()
-    out
+    job("labels") {
+      verts.join(cur, verts("id") === cur("a"), "left")
+        .groupBy(col("id"))
+        .agg(min(coalesce(col("b"), col("id"))).as("component"))
+        .localCheckpoint()
+    }
   }
 
   /** g9: components of the recurring-co-purchase part graph (g7's edge
@@ -175,18 +186,8 @@ object GraphOps {
       spark: SparkSession, dir: String,
       minSupport: Long = RelationalOps.TriangleSupport): DataFrame =
     connectedComponents(
-      // LAZY localCheckpoint: connectedComponents reads its edge input
-      // TWICE (the canon/union-find prologue and the vertex table), and
-      // without a cut the verts branch re-ran the whole co-purchase
-      // pair-generation pipeline a second time at the terminal join —
-      // profiled r17 as a duplicated ~0.5 s stage trio (the 12 MB pair
-      // explosion) at the END of the computation. The caller checkpoints
-      // (not the generic operator) because only the caller knows the
-      // upstream is a multi-exchange derivation worth storing; a cheap
-      // scan input should stay recomputable (guide §5 caching rule).
       RelationalOps.coPurchaseEdges(spark, dir, minSupport)
-        .select(col("pa").as("a"), col("pb").as("b"))
-        .localCheckpoint(false))
+        .select(col("pa").as("a"), col("pb").as("b")))
       .select(col("id").as("p_partkey"), col("component"))
 
   def partComponentsOracleSql: String =

@@ -238,42 +238,33 @@ object ImporterPipeline {
   }
 
   /** Loop form of [[codePageRank]] for variable or large iteration
-    * counts, where per-round checkpointing bounds the plan instead of
-    * unrolling. `reliable = true` uses fault-tolerant `checkpoint()`
-    * (requires `sparkContext.setCheckpointDir`) — the right choice on a
-    * real cluster, where `localCheckpoint` blocks die with a lost
-    * executor; the default keeps the faster local variant for
-    * single-node runs.
+    * counts, where per-round `localCheckpoint` bounds the plan instead of
+    * unrolling.
     */
   def codePageRankIterative(
-      dedup: DataFrame,
-      codeLists: DataFrame,
-      iterations: Int,
-      reliable: Boolean = false): DataFrame = {
+      dedup: DataFrame, codeLists: DataFrame, iterations: Int): DataFrame = {
     val e0 = codeEdges(dedup, codeLists).select(col("src"), col("dst"))
     val edges = e0.unionAll(e0.select(col("dst").as("src"), col("src").as("dst"))).cache()
     // both are re-read every iteration — cache so each round only runs the
     // contribution join + aggregate
     val outdeg = edges.groupBy(col("src")).agg(count(lit(1)).as("od")).cache()
     val nodes = edges.select(col("src").as("node")).distinct().cache()
-    def bound(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint() else df.localCheckpoint()
     val n = nodes.count() // one scalar driver agg, like the TF-IDF N
     val init = 1000000000L / math.max(1L, n)
     val base = (15L * init) / 100L
-    var ranks = bound(nodes.withColumn("r", lit(init)))
+    var ranks = nodes.withColumn("r", lit(init)).localCheckpoint()
     for (_ <- 0 until iterations) {
       val contrib = edges
         .join(ranks, edges("src") === ranks("node"))
         .join(outdeg, "src")
         .select(col("dst"), expr("r div od").as("c"))
         .groupBy(col("dst")).agg(sum(col("c")).as("csum"))
-      ranks = bound(
-        nodes
-          .join(contrib, nodes("node") === contrib("dst"), "left")
-          .select(
-            col("node"),
-            (lit(base) + expr(s"(85 * coalesce(csum, 0L)) div 100")).as("r")))
+      ranks = nodes
+        .join(contrib, nodes("node") === contrib("dst"), "left")
+        .select(
+          col("node"),
+          (lit(base) + expr(s"(85 * coalesce(csum, 0L)) div 100")).as("r"))
+        .localCheckpoint()
     }
     // ranks is checkpointed, so the lineage no longer needs the caches
     edges.unpersist()

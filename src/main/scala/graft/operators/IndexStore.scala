@@ -109,11 +109,12 @@ object IndexStore {
     })
 
   /** The persisted near-dup cluster assignment for `dir`, computed on
-    * first use from the shingle index — label propagation converges ONCE
-    * per (process, corpus) and downstream consumers (the d13 keeper
-    * selection) join against the stored (doc_id, cluster_id) frame
-    * instead of re-converging per query. The assignment is tiny
-    * (near-dup-sized), so this is a cheap read on every reuse.
+    * first use from the shingle index — the connected-components rounds
+    * run ONCE per (process, corpus) and downstream consumers (the d13
+    * keeper selection, d17, t59) join against the stored
+    * (doc_id, cluster_id) frame instead of re-converging per query. The
+    * assignment is tiny (near-dup-sized), so this is a cheap read on
+    * every reuse.
     */
   def clusterPath(spark: SparkSession, dir: String): String = {
     // resolve the shingle table BEFORE entering computeIfAbsent: a nested

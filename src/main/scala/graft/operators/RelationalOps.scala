@@ -983,7 +983,7 @@ object RelationalOps {
       .agg(count(lit(1)).as("n_triangles"))
       // materialize before dropping the cache: edges feeds three join
       // branches, and leaving it pinned for the driver's lifetime leaks
-      // executor storage (same discipline as duplicateClusters)
+      // executor storage
       .localCheckpoint()
     edges.unpersist()
     out

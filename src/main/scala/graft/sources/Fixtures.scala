@@ -91,21 +91,10 @@ object Fixtures {
     * INPUT BYTES, so at production scale (many multi-row-group files,
     * far above the ceiling) the branch is inert and no corpus pays the
     * exchange; locally the shuffled bytes are ≤ the ceiling by
-    * construction. Env-overridable (`SPARK_GRAFT_SMALL_INPUT_BYTES`);
-    * 0 disables.
+    * construction.
     */
-  private lazy val SmallInputCeiling: Long =
-    smallInputCeiling(sys.env.get("SPARK_GRAFT_SMALL_INPUT_BYTES"))
+  private val SmallInputCeiling: Long = 64L << 20
   private val SmallInputPerTask: Long = 16L << 10
-
-  /** The [[SmallInputCeiling]] a `SPARK_GRAFT_SMALL_INPUT_BYTES` value
-    * sets: 64 MiB when unset, else a non-negative byte count.
-    */
-  private[graft] def smallInputCeiling(raw: Option[String]): Long =
-    raw.fold(64L << 20) { v =>
-      v.trim.toLongOption.filter(_ >= 0).getOrElse(throw new IllegalArgumentException(
-        s"SPARK_GRAFT_SMALL_INPUT_BYTES must be a non-negative byte count, got '$v'"))
-    }
 
   /** Bytes under `path` on whatever file system holds it. */
   private[graft] def inputBytes(spark: SparkSession, path: String): Long = {

@@ -7,6 +7,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import graft.SparkJobs.named
 import graft.model.Schemas.ProcessedSchema
 import graft.operators.ImporterPipeline._
 
@@ -120,19 +121,6 @@ object ImporterStream {
 
     /** Forget the snapshot, so the next [[get]] reads the table again. */
     def drop(): Unit = synchronized { snapshot = None }
-  }
-
-  /** Runs `body` with its Spark jobs described and their stages named
-    * `name` (job description and short call site), restoring the caller's
-    * values after.
-    */
-  private def named[T](spark: SparkSession, name: String)(body: => T): T = {
-    val sc = spark.sparkContext
-    val keys = Seq("spark.job.description", "callSite.short")
-    val saved = keys.map(sc.getLocalProperty)
-    keys.foreach(sc.setLocalProperty(_, name))
-    try body
-    finally keys.zip(saved).foreach { case (k, v) => sc.setLocalProperty(k, v) }
   }
 
   /** One micro-batch: validate → anti-join processed → the static side's

@@ -25,18 +25,6 @@ class ConfigFailFastSpec extends SparkSuite {
       .toOption.get.enablePatchNodeId === false)
   }
 
-  test("SPARK_GRAFT_SMALL_INPUT_BYTES: a bad value fails naming the variable and the value") {
-    import graft.sources.Fixtures.smallInputCeiling
-    assert(smallInputCeiling(None) === (64L << 20))
-    assert(smallInputCeiling(Some("0")) === 0L)
-    assert(smallInputCeiling(Some("1048576")) === 1048576L)
-    for (bad <- Seq("64m", "-1", "")) {
-      val e = intercept[IllegalArgumentException](smallInputCeiling(Some(bad)))
-      assert(e.getMessage.contains("SPARK_GRAFT_SMALL_INPUT_BYTES"), e.getMessage)
-      assert(e.getMessage.contains(s"'$bad'"), e.getMessage)
-    }
-  }
-
   test("SPARK_GRAFT_CPUS: a bad value fails naming the variable and the value") {
     assert(Bench.cpus(None) === 4)
     assert(Bench.cpus(Some("8")) === 8)

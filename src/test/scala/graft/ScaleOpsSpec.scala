@@ -637,11 +637,11 @@ class ScaleOpsSpec extends SparkSuite {
     assert(MergeOps.snapshotDiff(prev, prev, Seq("id")).count() === 0L)
   }
 
-  test("star connected components: chains, messy input, and label-propagation agreement") {
+  test("star connected components: chains, messy input, and union-find agreement") {
     import spark.implicits._
     import graft.operators.GraphOps
-    // a 24-node chain (diameter ≫ log n — the shape label propagation
-    // crawls through) plus a triangle, a 2-clique, and an isolated pair;
+    // a 24-node chain (diameter ≫ log n — one label-propagation round per
+    // hop would need 23) plus a triangle, a 2-clique, and an isolated pair;
     // input deliberately messy: mixed orientation, dups, a self-loop
     val chain = (0L until 23L).map(i => (i + 1L, i))
     val rest = Seq((100L, 101L), (101L, 102L), (102L, 100L), // triangle
@@ -655,13 +655,43 @@ class ScaleOpsSpec extends SparkSuite {
     Seq(200L, 201L).foreach(i => assert(got(i) === 200L))
     Seq(300L, 301L).foreach(i => assert(got(i) === 300L))
     assert(got.size === 24 + 3 + 2 + 2)
-    // agreement with the engine's other closure on a real pair frame
-    val pairs = graft.operators.Dedup.ngramJaccardPairs(spark, sf0001)
-      .select(col("a"), col("b"))
-    val star = GraphOps.connectedComponents(pairs)
-      .select(col("id").as("doc_id"), col("component").as("cluster_id"))
-    val lp = graft.operators.Dedup.clustersFromPairs(pairs)
-    assert(star.exceptAll(lp).count() === 0L && lp.exceptAll(star).count() === 0L)
+    // agreement with a driver-side union-find over a real pair frame (the
+    // sf0.001 Jaccard pairs are small enough to collect); each merge keeps
+    // the smaller root, so every root is its component's minimum id
+    val pairs = Dedup.ngramJaccardPairs(spark, sf0001)
+    val pairRows = pairs.select(col("a"), col("b")).as[(Long, Long)].collect()
+    assert(pairRows.nonEmpty)
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    pairRows.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    val expected = parent.keys.map(x => (x, find(x))).toSet
+    val clusters = Dedup.clustersFromPairs(pairs)
+    assert(clusters.columns.toSeq === Seq("doc_id", "cluster_id"))
+    assert(clusters.as[(Long, Long)].collect().toSet === expected)
+  }
+
+  test("star connected components evaluate each input edge row once") {
+    import graft.operators.GraphOps
+    // the union-find prologue and the vertex table both read the edges;
+    // the operator's one cut must keep a derived edge set from running
+    // twice. A nondeterministic tap counts the rows the input produced.
+    val reads = spark.sparkContext.longAccumulator("edge rows read")
+    val tap = udf { () => reads.add(1L); true }.asNondeterministic()
+    // 50 components of 10 ids, each hung off its first id (self-loops
+    // included), over 4 partitions
+    val edges = spark.range(0L, 500L, 1L, 4)
+      .select(col("id").as("a"), (col("id") - col("id") % 10).as("b"))
+      .filter(tap())
+    val out = GraphOps.connectedComponents(edges)
+    assert(reads.value === 500L, "the edge input was evaluated more than once")
+    assert(out.count() === 500L)
+    assert(out.filter(col("component") =!= col("id") - col("id") % 10).count() === 0L)
   }
 
   test("rollup maintenance: merged partials ≡ full recompute; retraction drops emptied groups") {
