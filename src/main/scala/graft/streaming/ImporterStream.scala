@@ -1,13 +1,17 @@
 package graft.streaming
 
+import scala.concurrent.{Await, Future}
+import scala.concurrent.duration.Duration
 import scala.jdk.CollectionConverters._
+import scala.util.Try
+import scala.util.control.NonFatal
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.SparkJobs.named
+import graft.SparkJobs.{async, named}
 import graft.model.Schemas.ProcessedSchema
 import graft.operators.ImporterPipeline._
 
@@ -129,21 +133,34 @@ object ImporterStream {
     *
     * Sink contract: `updates`/`completed` are written to a
     * `run=<runNs>/batch_id=<id>` subdirectory with overwrite, so a
-    * same-checkpoint redelivery of a partially-written batch (e.g.
-    * `updates` landed but `completed` failed) REPLACES the partial output
-    * instead of appending a duplicate — the idempotency the
-    * processed-table anti-join alone cannot provide, because a failure
-    * after the first sink write leaves the events unmarked. `runNs` is
-    * checkpoint-persisted ([[graft.operators.IngestRun]]), so a fresh
-    * checkpoint (whose batch ids restart at 0) lands in its own namespace
-    * and never clobbers a previous life's output on shared sinks. A
-    * replay whose events are ALL already processed (the crash landed
+    * same-checkpoint redelivery of a partially-written batch (a crash
+    * between its writes) REPLACES the partial output instead of appending
+    * a duplicate. `runNs` is checkpoint-persisted
+    * ([[graft.operators.IngestRun]]), so a fresh checkpoint (whose batch
+    * ids restart at 0) lands in its own namespace and never clobbers a
+    * previous life's output on shared sinks.
+    *
+    * The batch's independent writes overlap, as the reference's per-insert
+    * goroutines behind one `WaitGroup` do
+    * (handler/incoming_instance_handler.go:148-184): the dead-letter write
+    * runs beside the new-events collect, and `updates` beside `completed`.
+    * One barrier waits for all three, even after one fails; only then is
+    * `processed` appended, so it stays the last write. A failure anywhere
+    * leaves the events unmarked, and the failed delivery deletes its own
+    * `run=/batch_id=` output after the barrier: the redelivery comes under
+    * a new batch id, so output left behind would land twice. That cleanup
+    * makes the order of the overlapped writes irrelevant. A failed
+    * dead-letter write still leaves `processBatch` with its exception,
+    * after the same cleanup.
+    *
+    * A replay whose events are ALL already processed (the crash landed
     * between the processed write and the checkpoint commit) writes
     * nothing at all — overwriting with the empty anti-join result would
-    * wipe the batch's previously-committed output. The
-    * `errors` sink stays append-per-delivery — duplicate error reports on
-    * redelivery are harmless and match the reference's
-    * report-then-commit consumer (message/kafka_message_receiver.go:44-50).
+    * wipe the batch's previously-committed output — and so has no output
+    * of its own to delete. The `errors` sink stays append-per-delivery —
+    * duplicate error reports on redelivery are harmless and match the
+    * reference's report-then-commit consumer
+    * (message/kafka_message_receiver.go:44-50).
     * Each sink gets one file per batch: the outputs are tens to hundreds
     * of rows.
     */
@@ -160,11 +177,14 @@ object ImporterStream {
     val events = batch.coalesce(1)
     val valid = validEvents(events)
 
-    // validation dead-letters first: they must reach the errors sink even
-    // if the pipeline body below fails.
-    named(spark, "importer dead-letter sink") {
+    // the dead-letter write starts first and runs beside everything below:
+    // its rows must reach the errors sink even if the pipeline body fails
+    val dead = async(spark, "importer dead-letter sink") {
       deadLetters(events).write.mode("append").parquet(sinks.errors)
     }
+    var writes = Seq(dead)
+    // this delivery's per-batch outputs, once their writes have started
+    var outputs = Seq.empty[String]
     // the batch's new events, collected to the driver (at most one
     // trigger's intake, two short strings each); every sink below and the
     // error report read this local relation
@@ -183,21 +203,26 @@ object ImporterStream {
       // batch's previously-written updates/completed output with empty
       // frames. No new events is exactly that replay (or a genuinely
       // empty trigger, where there is nothing to write either way).
-      if (rows.nonEmpty) {
-        val ids = rows.map(_.getAs[String]("instance_id"))
+      val ids = rows.map(_.getAs[String]("instance_id"))
+      if (ids.nonEmpty) {
         // a literal set, not a join: a broadcast of the ids would cost a job
         val updates = side.get.where(col("instance_id").isin(ids.distinct.toIndexedSeq: _*))
-
-        named(spark, "importer updates sink") {
-          updates.coalesce(1).write.mode("overwrite")
-            .parquet(s"${sinks.updates}/run=$runNs/batch_id=$batchId")
-        }
-        named(spark, "importer completed sink") {
-          completedEvents(newEvents).coalesce(1).write.mode("overwrite")
-            .parquet(s"${sinks.completed}/run=$runNs/batch_id=$batchId")
-        }
-        // processed is written LAST: a failure anywhere above leaves the
-        // events unmarked, so redelivery retries them (at-least-once).
+        val updatesDir = s"${sinks.updates}/run=$runNs/batch_id=$batchId"
+        val completedDir = s"${sinks.completed}/run=$runNs/batch_id=$batchId"
+        outputs = Seq(updatesDir, completedDir)
+        writes ++= Seq(
+          async(spark, "importer updates sink") {
+            updates.coalesce(1).write.mode("overwrite").parquet(updatesDir)
+          },
+          async(spark, "importer completed sink") {
+            completedEvents(newEvents).coalesce(1).write.mode("overwrite").parquet(completedDir)
+          })
+      }
+      barrier(writes).foreach(_.get)
+      // processed is written LAST, after the barrier: a failure in any
+      // write above leaves the events unmarked, so redelivery retries them
+      // (at-least-once).
+      if (ids.nonEmpty) {
         named(spark, "importer processed sink") {
           newEvents.select("instance_id").coalesce(1).write.mode("append").parquet(sinks.processed)
         }
@@ -210,7 +235,18 @@ object ImporterStream {
       // (the reference commits the message after reporting, so a poison
       // batch never wedges the consumer); the events stay out of
       // `processed`, so a later redelivery retries them.
-      case scala.util.control.NonFatal(e) =>
+      case NonFatal(e) =>
+        // no write of this delivery may land after its cleanup
+        barrier(writes)
+        // the redelivery comes under a new batch id, so this delivery's
+        // partial per-batch output must not outlive it
+        outputs.foreach { d =>
+          val p = new Path(d)
+          p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+        }
+        // the errors sink itself failed, so this batch's failure cannot be
+        // reported there: it leaves processBatch, and nothing is marked
+        dead.value.get.failed.foreach(throw _)
         side.drop()
         processed.drop()
         val error = s"${e.getClass.getName}: ${Option(e.getMessage).getOrElse("")}".take(512)
@@ -230,6 +266,12 @@ object ImporterStream {
         }
     }
   }
+
+  /** Waits for every write, failed or not, so none lands after the caller
+    * goes on; returns their outcomes in order.
+    */
+  private def barrier(writes: Seq[Future[Unit]]): Seq[Try[Unit]] =
+    writes.map(w => Await.ready(w, Duration.Inf).value.get)
 
   /** Start the streaming query over an events stream DataFrame. */
   def start(

@@ -1,10 +1,11 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, LinkedBlockingQueue, TimeUnit}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
@@ -395,18 +396,21 @@ class StreamingSpec extends SparkSuite {
     assert(dataFiles(Paths.get(sinks.errors)) <= batches.size)
   }
 
-  test("a sink failing on k consecutive deliveries: outputs equal a fault-free run, k error rows per event") {
+  /** Delivers batch 1 k + 1 times; the first k deliveries meet a broken
+    * `sink` (the query's run directory there replaced by a regular file).
+    * The outputs must equal a fault-free run's, with k error rows per
+    * event those deliveries carried new.
+    */
+  private def sinkFailingOnKDeliveries(sink: String): Unit = {
     import graft.operators.ImporterPipeline.projectDimensions
     import graft.sources.Fixtures
     val chunks = feedChunks(seed = 13, n = 4)
-    // batch 1 is delivered k + 1 times; the first k deliveries meet a
-    // broken updates sink
     val k = 2
     val deliveries = Seq(chunks(0)) ++ Seq.fill(k + 1)(chunks(1)) ++ chunks.drop(2)
     val failing = 1 to k
 
     /** Runs the deliveries into a fresh output directory, with the query's
-      * updates run directory replaced by a regular file during `failing`;
+      * `sink` run directory replaced by a regular file during `failing`;
       * returns the directory and the processed_instances scans per batch.
       */
     def run(faults: Boolean): (String, Seq[Int]) = {
@@ -418,7 +422,7 @@ class StreamingSpec extends SparkSuite {
       val q = ImporterStream.start(spark, mem.toDF().toDF("file_url", "instance_id"),
         projectDimensions(Fixtures.apiDimensions(spark, sf0001)), Fixtures.codeLists(spark, sf0001),
         outDir, Files.createTempDirectory("fault-ckpt").toString)
-      def runDir = Files.list(Paths.get(outDir, "updates")).iterator().asScala.toSeq
+      def runDir = Files.list(Paths.get(outDir, sink)).iterator().asScala.toSeq
         .filter(_.getFileName.toString.startsWith("run=")) match {
         case Seq(r) => r
         case other => fail(s"expected one run directory, got $other")
@@ -474,6 +478,97 @@ class StreamingSpec extends SparkSuite {
     assert(affected.nonEmpty, "the failing deliveries carried no new event")
     val failed = errors(faulty).filter(_._3 == failure).map(e => (e._1, e._2))
     assert(failed.groupBy(identity).map { case (e, n) => e -> n.size } === affected.map(_ -> k).toMap)
+  }
+
+  test("a sink failing on k consecutive deliveries: outputs equal a fault-free run, k error rows per event") {
+    sinkFailingOnKDeliveries("updates")
+  }
+
+  test("the completed sink failing on k consecutive deliveries: the failed deliveries' updates do not survive") {
+    // updates lands before completed fails (or beside it): each failed
+    // delivery must remove its own per-batch output, or the redelivery,
+    // under a new batch id, lands those rows a second time
+    sinkFailingOnKDeliveries("completed")
+  }
+
+  test("a batch's writes overlap under the query's job group; processed starts after the others end") {
+    final case class Job(name: String, batch: String, group: String, query: String, start: Long)
+    val Marker = "graft importer job marker"
+    val jobs = new ConcurrentHashMap[Int, Job]()
+    val ends = new ConcurrentHashMap[Int, Long]()
+    val markerEnded = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        def prop(k: String) = Option(e.properties).flatMap(p => Option(p.getProperty(k))).getOrElse("")
+        jobs.put(e.jobId, Job(prop("spark.job.description"), prop("streaming.sql.batchId"),
+          prop("spark.jobGroup.id"), prop("sql.streaming.queryId"), e.time))
+      }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = {
+        ends.put(e.jobId, e.time)
+        if (Option(jobs.get(e.jobId)).exists(_.name == Marker)) markerEnded.countDown()
+      }
+    }
+    val outDir = Files.createTempDirectory("overlap-out").toString
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[(String, String)]
+    spark.sparkContext.addSparkListener(listener)
+    val q = try {
+      val q = ImporterStream.start(spark, mem.toDF().toDF("file_url", "instance_id"),
+        graft.operators.ImporterPipeline.projectDimensions(fixtureDims), fixtureCodeLists,
+        outDir, Files.createTempDirectory("overlap-ckpt").toString)
+      try {
+        for (b <- Seq(Seq(("/a", "A"), ("/bad", "")), Seq(("/b", "B")))) {
+          mem.addData(b)
+          q.processAllAvailable()
+        }
+      } finally q.stop()
+      // the listener bus is ordered: once the marker job has ended there,
+      // every job of the query has been reported
+      spark.sparkContext.setJobDescription(Marker)
+      try spark.range(1).collect()
+      finally spark.sparkContext.setJobDescription(null)
+      assert(markerEnded.await(60, TimeUnit.SECONDS), "the marker job never reached the listener")
+      q
+    } finally spark.sparkContext.removeSparkListener(listener)
+
+    val importer = jobs.asScala.toSeq.filter(_._2.name.startsWith("importer"))
+    assert(importer.nonEmpty)
+    importer.foreach { case (id, j) =>
+      assert(j.group === q.runId.toString, s"job $id ($j) left the query's job group")
+      assert(j.query === q.id.toString, s"job $id ($j)")
+    }
+    val sinkJobs = Set("importer dead-letter sink", "importer updates sink", "importer completed sink")
+    val byBatch = importer.groupBy(_._2.batch)
+    assert(byBatch.keySet === Set("0", "1"), byBatch)
+    for ((batch, batchJobs) <- byBatch) {
+      val names = batchJobs.map(_._2.name).toSet
+      assert(names -- Set("importer static side", "importer processed-instance seed") ===
+        sinkJobs ++ Set("importer new events", "importer processed sink"), s"batch $batch")
+      val Seq(processedStart) = batchJobs.collect { case (_, j) if j.name == "importer processed sink" => j.start }
+      for ((id, j) <- batchJobs if sinkJobs(j.name))
+        assert(ends.asScala.get(id).exists(_ <= processedStart),
+          s"batch $batch: ${j.name} did not end before the processed sink started")
+    }
+  }
+
+  test("a failed dead-letter write leaves processBatch; nothing is marked, no per-batch output is left") {
+    val outDir = Files.createTempDirectory("dead-fail-out").toString
+    val sinks = ImporterStream.Sinks(outDir)
+    // the errors sink is a regular file: the dead-letter write fails
+    Files.createFile(Paths.get(sinks.errors))
+    val side = new ImporterStream.StaticSide(
+      graft.operators.ImporterPipeline.projectDimensions(fixtureDims), fixtureCodeLists)
+    val batch = Seq(("/a", "A"), ("/bad", "")).toDF("file_url", "instance_id")
+    intercept[Exception] {
+      ImporterStream.processBatch(spark, batch, side,
+        new ImporterStream.ProcessedIds(sinks.processed), sinks, "run1", 0L)
+    }
+    assert(!Files.exists(Paths.get(sinks.processed)), "a batch whose dead letters failed was marked")
+    for (sink <- Seq(sinks.updates, sinks.completed) if Files.exists(Paths.get(sink))) {
+      val left = Files.walk(Paths.get(sink)).iterator().asScala
+        .filter(_.getFileName.toString.startsWith("batch_id=")).toSeq
+      assert(left.isEmpty, s"the failed batch left $left")
+    }
   }
 
   test("graceful drain flushes in-flight data; restart after drain adds no duplicates (ST5)") {
