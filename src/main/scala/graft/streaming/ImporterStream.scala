@@ -7,9 +7,9 @@ import scala.util.Try
 import scala.util.control.NonFatal
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.SparkJobs.{async, named}
 import graft.model.Schemas.ProcessedSchema
@@ -17,14 +17,14 @@ import graft.operators.ImporterPipeline._
 
 /** Streaming shell for the importer pipeline (SURVEY.md §2.6): the same
   * batch DAG applied per micro-batch under `foreachBatch`, with
-  *   - idempotency (ST1): each batch's events are anti-joined against the
-  *     query's in-memory set of processed instance ids ([[ProcessedIds]]),
-  *     the counterpart of the reference's per-event InstanceExists lookup.
-  *     The reference is at-most-once; Spark is at-least-once, so the
-  *     anti-join makes redelivery harmless. The `processed_instances`
-  *     table is the durable copy of the set.
+  *   - idempotency (ST1): each valid event is looked up in the query's
+  *     in-memory set of processed instance ids ([[ProcessedIds]]), as the
+  *     reference's per-event InstanceExists lookup does; no relation is
+  *     built over the set. The reference is at-most-once; Spark is
+  *     at-least-once, so the lookup makes redelivery harmless. The
+  *     `processed_instances` table is the durable copy of the set.
   *   - dead-letter side output (ST4): invalid events appended to an errors
-  *     table instead of being dropped.
+  *     table instead of being dropped; a batch with none writes nothing.
   *   - multi-sink fan-out: updates + completed + errors parquet appends per
   *     micro-batch (stand-ins for graph DB, Kafka out, report topic).
   *
@@ -32,6 +32,11 @@ import graft.operators.ImporterPipeline._
   * `from_avro(value, schema)` (reference `schema/schema.go:7-26`); tests
   * drive the identical DAG with a MemoryStream — the pipeline only sees a
   * DataFrame of (file_url, instance_id).
+  *
+  * No fixed trigger: Spark's default starts the next micro-batch as soon as
+  * the previous one ends and data is waiting, as the reference handles
+  * each message once its consumer pulls it (message/consumer.go:24-56).
+  * An event then waits for the batch in flight, not for a trigger.
   *
   * Static side lifetime: the dimension side (`dims` → valid → dedup →
   * order lookup → update filter) is derived once per streaming query, on
@@ -127,9 +132,16 @@ object ImporterStream {
     def drop(): Unit = synchronized { snapshot = None }
   }
 
-  /** One micro-batch: validate → anti-join processed → the static side's
-    * updates for the new instances → sinks. Public so tests can drive a
-    * single batch synchronously.
+  /** One micro-batch: read the batch → validate → look up processed → the
+    * static side's updates for the new instances → sinks. Public so tests
+    * can drive a single batch synchronously.
+    *
+    * The batch is read once, by one collect: the Spark driver holds one
+    * batch's rows, as many as the source delivers per trigger (a Kafka
+    * source bounds that with its own `maxOffsetsPerTrigger`). Validation, the
+    * dead-letter check and the processed lookup run on that local relation
+    * and start no job. A failed read leaves `processBatch` and marks
+    * nothing.
     *
     * Sink contract: `updates`/`completed` are written to a
     * `run=<runNs>/batch_id=<id>` subdirectory with overwrite, so a
@@ -142,9 +154,10 @@ object ImporterStream {
     *
     * The batch's independent writes overlap, as the reference's per-insert
     * goroutines behind one `WaitGroup` do
-    * (handler/incoming_instance_handler.go:148-184): the dead-letter write
-    * runs beside the new-events collect, and `updates` beside `completed`.
-    * One barrier waits for all three, even after one fails; only then is
+    * (handler/incoming_instance_handler.go:148-184): the dead-letter write,
+    * when the batch has a malformed event, starts before everything else,
+    * and `updates` runs beside `completed`.
+    * One barrier waits for all of them, even after one fails; only then is
     * `processed` appended, so it stays the last write. A failure anywhere
     * leaves the events unmarked, and the failed delivery deletes its own
     * `run=/batch_id=` output after the barrier: the redelivery comes under
@@ -155,7 +168,7 @@ object ImporterStream {
     *
     * A replay whose events are ALL already processed (the crash landed
     * between the processed write and the checkpoint commit) writes
-    * nothing at all — overwriting with the empty anti-join result would
+    * nothing at all — overwriting with the empty lookup result would
     * wipe the batch's previously-committed output — and so has no output
     * of its own to delete. The `errors` sink stays append-per-delivery —
     * duplicate error reports on redelivery are harmless and match the
@@ -172,37 +185,40 @@ object ImporterStream {
       sinks: Sinks,
       runNs: String,
       batchId: Long): Unit = {
-    // one partition: a batch is one trigger's intake, and on one partition
-    // the anti-join's distinct needs no shuffle
-    val events = batch.coalesce(1)
+    // the only job that reads the source: everything below works on this
+    // local relation, whose filters and projections Catalyst folds into it
+    // (`ConvertToLocalRelation`), so reading them back starts no job
+    val events = spark.createDataFrame(
+      named(spark, "importer batch")(batch.collect()).toSeq.asJava, batch.schema)
     val valid = validEvents(events)
+    val deadEvents = deadLetters(events)
 
     // the dead-letter write starts first and runs beside everything below:
     // its rows must reach the errors sink even if the pipeline body fails
-    val dead = async(spark, "importer dead-letter sink") {
-      deadLetters(events).write.mode("append").parquet(sinks.errors)
-    }
-    var writes = Seq(dead)
+    val dead = if (deadEvents.isEmpty) None else Some(async(spark, "importer dead-letter sink") {
+      deadEvents.coalesce(1).write.mode("append").parquet(sinks.errors)
+    })
+    var writes = dead.toSeq
     // this delivery's per-batch outputs, once their writes have started
     var outputs = Seq.empty[String]
-    // the batch's new events, collected to the driver (at most one
-    // trigger's intake, two short strings each); every sink below and the
-    // error report read this local relation
+    // the batch's new events; every sink below and the error report read
+    // this local relation
     var fresh: Option[DataFrame] = None
     try {
-      val existing = spark.createDataFrame(
-        processed.get(spark).toSeq.map(Row(_)).asJava, ProcessedSchema)
-      val newInst = newInstanceEvents(valid, existing)
-      val rows = named(spark, "importer new events")(newInst.collect())
-      val newEvents = spark.createDataFrame(rows.toSeq.asJava, newInst.schema)
+      // the reference's per-event InstanceExists lookup against the query's
+      // set, then newInstanceEvents' distinct over (file_url, instance_id)
+      val known = processed.get(spark)
+      val pairs = valid.select(col("file_url"), col("instance_id"))
+      val rows = pairs.collect().filterNot(r => known(r.getAs[String]("instance_id"))).distinct
+      val newEvents = spark.createDataFrame(rows.toSeq.asJava, pairs.schema)
       fresh = Some(newEvents)
       // NO new events → nothing to write, and CRITICALLY no overwrite: a
       // replay that lands after the processed write succeeded but before
-      // the checkpoint committed re-enters here with every event filtered
-      // by the anti-join, and an unconditional overwrite would WIPE the
+      // the checkpoint committed re-enters here with every event already
+      // in the set, and an unconditional overwrite would WIPE the
       // batch's previously-written updates/completed output with empty
-      // frames. No new events is exactly that replay (or a genuinely
-      // empty trigger, where there is nothing to write either way).
+      // frames. No new events is exactly that replay (or a batch with no
+      // valid event, where there is nothing to write either way).
       val ids = rows.map(_.getAs[String]("instance_id"))
       if (ids.nonEmpty) {
         // a literal set, not a join: a broadcast of the ids would cost a job
@@ -246,7 +262,7 @@ object ImporterStream {
         }
         // the errors sink itself failed, so this batch's failure cannot be
         // reported there: it leaves processBatch, and nothing is marked
-        dead.value.get.failed.foreach(throw _)
+        dead.foreach(_.value.get.failed.foreach(throw _))
         side.drop()
         processed.drop()
         val error = s"${e.getClass.getName}: ${Option(e.getMessage).getOrElse("")}".take(512)
@@ -288,7 +304,6 @@ object ImporterStream {
     eventsStream.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.ProcessingTime("1 second"))
       .foreachBatch { (batch: DataFrame, id: Long) =>
         processBatch(spark, batch, side, processed, sinks, runNs, id)
       }

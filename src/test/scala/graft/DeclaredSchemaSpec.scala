@@ -103,9 +103,9 @@ class DeclaredSchemaSpec extends SparkSuite {
       assert(spark.read.parquet(sinks.processed).as[String].collect().toSeq === Seq("A"))
       assert(spark.read.parquet(sinks.completed).select("instance_id").as[String]
         .collect().toSeq === Seq("A"))
-      val errors = spark.read.schema("err_context string").parquet(sinks.errors)
-      assert(errors.filter($"err_context".isNotNull).count() === 0,
-        "the empty processed table was reported as an error")
+      // a batch with no malformed event writes the errors sink only to
+      // report a failure
+      assert(!Files.exists(Paths.get(sinks.errors)), "the empty processed table was reported as an error")
     } finally {
       Files.walk(outDir).iterator().asScala.toSeq.reverse.foreach(p => Files.deleteIfExists(p))
     }

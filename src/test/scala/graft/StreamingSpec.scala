@@ -11,6 +11,7 @@ import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.util.LongAccumulator
 
@@ -491,8 +492,14 @@ class StreamingSpec extends SparkSuite {
     sinkFailingOnKDeliveries("completed")
   }
 
-  test("a batch's writes overlap under the query's job group; processed starts after the others end") {
-    final case class Job(name: String, batch: String, group: String, query: String, start: Long)
+  private final case class Job(name: String, batch: String, group: String, query: String, start: Long)
+
+  /** Runs `batches` through a fresh `ImporterStream` query into `outDir`,
+    * one `processAllAvailable` each, and returns the query with the
+    * `importer …` jobs it started (by job id) and every job's end time.
+    */
+  private def importerJobs(outDir: String, batches: Seq[Seq[(String, String)]])
+      : (StreamingQuery, Map[Int, Job], Map[Int, Long]) = {
     val Marker = "graft importer job marker"
     val jobs = new ConcurrentHashMap[Int, Job]()
     val ends = new ConcurrentHashMap[Int, Long]()
@@ -508,16 +515,15 @@ class StreamingSpec extends SparkSuite {
         if (Option(jobs.get(e.jobId)).exists(_.name == Marker)) markerEnded.countDown()
       }
     }
-    val outDir = Files.createTempDirectory("overlap-out").toString
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(String, String)]
     spark.sparkContext.addSparkListener(listener)
     val q = try {
       val q = ImporterStream.start(spark, mem.toDF().toDF("file_url", "instance_id"),
         graft.operators.ImporterPipeline.projectDimensions(fixtureDims), fixtureCodeLists,
-        outDir, Files.createTempDirectory("overlap-ckpt").toString)
+        outDir, Files.createTempDirectory("jobs-ckpt").toString)
       try {
-        for (b <- Seq(Seq(("/a", "A"), ("/bad", "")), Seq(("/b", "B")))) {
+        for (b <- batches) {
           mem.addData(b)
           q.processAllAvailable()
         }
@@ -530,25 +536,95 @@ class StreamingSpec extends SparkSuite {
       assert(markerEnded.await(60, TimeUnit.SECONDS), "the marker job never reached the listener")
       q
     } finally spark.sparkContext.removeSparkListener(listener)
+    (q, jobs.asScala.toMap.filter(_._2.name.startsWith("importer")), ends.asScala.toMap)
+  }
 
-    val importer = jobs.asScala.toSeq.filter(_._2.name.startsWith("importer"))
+  test("a batch's writes overlap under the query's job group; processed starts after the others end") {
+    val outDir = Files.createTempDirectory("overlap-out").toString
+    val (q, importer, ends) = importerJobs(outDir, Seq(Seq(("/a", "A"), ("/bad", "")), Seq(("/b", "B"))))
     assert(importer.nonEmpty)
     importer.foreach { case (id, j) =>
       assert(j.group === q.runId.toString, s"job $id ($j) left the query's job group")
       assert(j.query === q.id.toString, s"job $id ($j)")
     }
     val sinkJobs = Set("importer dead-letter sink", "importer updates sink", "importer completed sink")
-    val byBatch = importer.groupBy(_._2.batch)
+    val byBatch = importer.toSeq.groupBy(_._2.batch)
     assert(byBatch.keySet === Set("0", "1"), byBatch)
+    // the batch is read by one job; batch 1 has no malformed event, so no
+    // dead-letter write; the static side is derived on batch 0 only
+    val expected = Map(
+      "0" -> (sinkJobs ++ Set("importer batch", "importer processed sink", "importer static side")),
+      "1" -> Set("importer batch", "importer updates sink", "importer completed sink", "importer processed sink"))
     for ((batch, batchJobs) <- byBatch) {
-      val names = batchJobs.map(_._2.name).toSet
-      assert(names -- Set("importer static side", "importer processed-instance seed") ===
-        sinkJobs ++ Set("importer new events", "importer processed sink"), s"batch $batch")
+      val names = batchJobs.map(_._2.name)
+      assert(names.toSet === expected(batch), s"batch $batch")
+      assert(!names.contains("importer new events"), s"batch $batch")
+      assert(names.count(_ == "importer batch") === 1, s"batch $batch read its source more than once")
       val Seq(processedStart) = batchJobs.collect { case (_, j) if j.name == "importer processed sink" => j.start }
       for ((id, j) <- batchJobs if sinkJobs(j.name))
-        assert(ends.asScala.get(id).exists(_ <= processedStart),
+        assert(ends.get(id).exists(_ <= processedStart),
           s"batch $batch: ${j.name} did not end before the processed sink started")
     }
+  }
+
+  test("a batch with no malformed event writes no errors file and starts no dead-letter job") {
+    val outDir = Files.createTempDirectory("no-dead-out").toString
+    val sinks = ImporterStream.Sinks(outDir)
+    val (_, clean, _) = importerJobs(outDir, Seq(Seq(("/a", "A"), ("/b", "B"))))
+    assert(clean.values.map(_.name).toSet.contains("importer completed sink"), clean)
+    assert(!clean.values.exists(_.name == "importer dead-letter sink"), clean)
+    assert(!Files.exists(Paths.get(sinks.errors)), "a batch without dead letters wrote an errors file")
+
+    // one malformed event: exactly one dead-letter job and one row
+    val (_, withBad, _) = importerJobs(outDir, Seq(Seq(("/c", "A"), ("/bad", ""))))
+    assert(withBad.values.count(_.name == "importer dead-letter sink") === 1, withBad)
+    assert(spark.read.parquet(sinks.errors).select("file_url", "instance_id", "err_context")
+      .as[(String, String, String)].collect().toSeq === Seq(("/bad", "", "unable to process message")))
+  }
+
+  test("the per-event processed lookup equals the batch anti-join on a crafted batch") {
+    import graft.operators.ImporterPipeline._
+    val outDir = Files.createTempDirectory("lookup-out").toString
+    val sinks = ImporterStream.Sinks(outDir)
+    // a previous life marked P
+    Seq("P").toDF("instance_id").write.parquet(sinks.processed)
+    val batch = Seq(
+      ("/a", "A"), ("/a", "A"), // an exact duplicate delivery
+      ("/b1", "B"), ("/b2", "B"), // one instance under two file_urls
+      ("/e", ""), // malformed: an empty instance_id
+      ("/n", null), // neither valid nor malformed
+      ("/p", "P"), ("/p2", "P")) // already processed, original URL and another
+      .toDF("file_url", "instance_id")
+    def rows(df: DataFrame) = df.select("file_url", "instance_id").collect().map(_.toString).toSeq.sorted
+    def errorRows(df: DataFrame) =
+      df.select("file_url", "instance_id", "err_context", "error").collect().map(_.toString).toSeq.sorted
+    val expectedCompleted = rows(completedEvents(newInstanceEvents(validEvents(batch),
+      spark.read.schema(graft.model.Schemas.ProcessedSchema).parquet(sinks.processed))))
+    val expectedErrors = errorRows(deadLetters(batch))
+    assert(expectedCompleted === Seq("[/a,A]", "[/b1,B]", "[/b2,B]"))
+
+    ImporterStream.processBatch(spark, batch,
+      new ImporterStream.StaticSide(projectDimensions(fixtureDims), fixtureCodeLists),
+      new ImporterStream.ProcessedIds(sinks.processed), sinks, "run1", 0L)
+    assert(rows(spark.read.parquet(sinks.completed)) === expectedCompleted)
+    assert(errorRows(spark.read.parquet(sinks.errors)) === expectedErrors)
+  }
+
+  test("the jobs of a steady batch do not grow with the processed set") {
+    val outDir = Files.createTempDirectory("steady-jobs-out").toString
+    // a previous life marked 2,000 instances; each batch adds three and
+    // redelivers one it marked itself
+    (0 until 2000).map(i => s"old$i").toDF("instance_id").write.parquet(ImporterStream.Sinks(outDir).processed)
+    val batches = (0 until 6).map { b =>
+      (0 until 3).map(i => (s"/n$b-$i", s"N$b-$i")) ++ Seq((s"/old$b", s"old$b")) ++
+        (if (b > 0) Seq((s"/n${b - 1}-0", s"N${b - 1}-0")) else Nil)
+    }
+    val (_, importer, _) = importerJobs(outDir, batches)
+    val perBatch = (0 until 6).map(b => importer.values.count(_.batch == b.toString))
+    // batch 0 also seeds the set and derives the static side
+    assert(perBatch.tail === Seq.fill(5)(4), s"importer jobs per batch: $perBatch")
+    val completed = spark.read.parquet(s"$outDir/completed").select("instance_id").as[String].collect()
+    assert(completed.sorted.toSeq === batches.flatMap(_.take(3).map(_._2)).sorted)
   }
 
   test("a failed dead-letter write leaves processBatch; nothing is marked, no per-batch output is left") {

@@ -12,8 +12,11 @@ prints, for each non-empty batch (a batch span in which at least one
                  batch start: every other write of the batch lies before it,
                  so this is the batch's critical path ("-" when the batch
                  marked nothing);
-  - idle_s:      the batch time that no Spark job covers (driver work between
-                 jobs, commit gaps, planning);
+  - pre_s:       batch start to the first job's start (offset log, planning);
+  - gap_s:       time between the first job's start and the last job's end
+                 that no job covers (Spark driver work between jobs);
+  - post_s:      the last job's end to the batch end (the processed commit's
+                 tail and the commit log);
   - jobs:        the jobs started in the batch.
 The medians over those batches close the listing.
 """
@@ -54,31 +57,37 @@ def batches(spans_file):
         jobs = [j for j in spans_file["jobs"] if covers(b, j["start_ms"])]
         if not any(job_name(j).startswith("importer") for j in jobs):
             continue
-        wall = b["end_ms"] - b["start_ms"]
         marks = [j["start_ms"] for j in jobs if job_name(j) == PROCESSED]
+        first = max(min(j["start_ms"] for j in jobs), b["start_ms"])
+        last = min(max(j["end_ms"] for j in jobs), b["end_ms"])
         out.append({
             "batch": b["request"],
-            "wall_s": wall / 1000.0,
+            "wall_s": (b["end_ms"] - b["start_ms"]) / 1000.0,
             "processed_s": (min(marks) - b["start_ms"]) / 1000.0 if marks else None,
-            "idle_s": (wall - covered_ms(b["start_ms"], b["end_ms"], jobs)) / 1000.0,
+            "pre_s": (first - b["start_ms"]) / 1000.0,
+            "gap_s": max(0.0, last - first - covered_ms(first, last, jobs)) / 1000.0,
+            "post_s": (b["end_ms"] - last) / 1000.0,
             "jobs": len(jobs),
         })
     return out
 
 
+COLUMNS = (("wall_s", 7), ("processed_s", 11), ("pre_s", 7), ("gap_s", 7), ("post_s", 7), ("jobs", 5))
+
+
 def report(rows):
     def cell(v):
-        return "-" if v is None else f"{v:.3f}"
-    lines = [f"{'batch':<10} {'wall_s':>7} {'processed_s':>11} {'idle_s':>7} {'jobs':>5}"]
-    for r in rows:
-        lines.append(f"{r['batch']:<10} {cell(r['wall_s']):>7} {cell(r['processed_s']):>11} "
-                     f"{cell(r['idle_s']):>7} {r['jobs']:>5}")
+        return "-" if v is None else v if isinstance(v, int) else f"{v:.3f}"
+
+    def line(label, values):
+        return f"{label:<10} " + " ".join(f"{cell(v):>{w}}" for v, (_, w) in zip(values, COLUMNS))
 
     def median(key):
         vals = [r[key] for r in rows if r[key] is not None]
-        return statistics.median(vals) if vals else None
-    lines.append(f"{'median':<10} {cell(median('wall_s')):>7} {cell(median('processed_s')):>11} "
-                 f"{cell(median('idle_s')):>7} {cell(median('jobs')):>5}")
+        return float(statistics.median(vals)) if vals else None
+    lines = [f"{'batch':<10} " + " ".join(f"{k:>{w}}" for k, w in COLUMNS)]
+    lines += [line(r["batch"], [r[k] for k, _ in COLUMNS]) for r in rows]
+    lines.append(line("median", [median(k) for k, _ in COLUMNS]))
     lines.append(f"non-empty batches: {len(rows)}")
     return "\n".join(lines)
 
@@ -86,41 +95,47 @@ def report(rows):
 SAMPLE = {
     "spans": [
         {"name": "tick", "request": "traced#tick0", "start_ms": 0.0, "end_ms": 1.0},
-        # batch 0: dead letters 0-100, collect 100-200, updates 200-300,
+        # batch 0: batch read 50-100, dead letters 100-200, updates 200-300,
         # completed 250-350, processed 400-450; 1000 ms wall
         {"name": "batch", "request": "batch#0", "start_ms": 0.0, "end_ms": 1000.0},
         # batch 1: empty trigger, no job
         {"name": "batch", "request": "batch#1", "start_ms": 1000.0, "end_ms": 1010.0},
-        # batch 2: every event already processed, so no processed sink
-        {"name": "batch", "request": "batch#2", "start_ms": 2000.0, "end_ms": 2500.5},
+        # batch 2: every event already processed, so only the batch read
+        {"name": "batch", "request": "batch#2", "start_ms": 2000.0, "end_ms": 2300.0},
+        # batch 3: the pipeline failed after the read; its error write ends
+        # after the batch, so only the part inside counts
+        {"name": "batch", "request": "batch#3", "start_ms": 3000.0, "end_ms": 3500.5},
     ],
     "jobs": [
-        {"start_ms": 0.0, "end_ms": 100.0, "stages": ["importer dead-letter sink"]},
-        {"start_ms": 100.0, "end_ms": 200.0, "stages": ["importer new events"]},
+        {"start_ms": 50.0, "end_ms": 100.0, "stages": ["importer batch"]},
+        {"start_ms": 100.0, "end_ms": 200.0, "stages": ["importer dead-letter sink"]},
         {"start_ms": 200.0, "end_ms": 300.0, "stages": ["importer updates sink"]},
         {"start_ms": 250.0, "end_ms": 350.0, "stages": ["importer completed sink"]},
         {"start_ms": 400.0, "end_ms": 450.0, "stages": [PROCESSED]},
-        {"start_ms": 2000.0, "end_ms": 2100.0, "stages": ["importer dead-letter sink"]},
-        {"start_ms": 2050.0, "end_ms": 2200.0, "stages": ["importer new events"]},
-        # ends after its batch: only the part inside counts as covered
-        {"start_ms": 2500.0, "end_ms": 2600.0, "stages": ["importer error sink"]},
+        {"start_ms": 2020.0, "end_ms": 2100.0, "stages": ["importer batch"]},
+        {"start_ms": 3000.0, "end_ms": 3100.0, "stages": ["importer batch"]},
+        {"start_ms": 3050.0, "end_ms": 3200.0, "stages": ["importer static side"]},
+        {"start_ms": 3500.0, "end_ms": 3600.0, "stages": ["importer error sink"]},
     ],
 }
 
 
 def self_test():
     rows = batches(SAMPLE)
-    assert [r["batch"] for r in rows] == ["batch#0", "batch#2"], rows
-    b0, b2 = rows
-    assert b0["jobs"] == 5 and b2["jobs"] == 3, rows
+    assert [r["batch"] for r in rows] == ["batch#0", "batch#2", "batch#3"], rows
+    b0, b2, b3 = rows
+    assert [r["jobs"] for r in rows] == [5, 1, 3], rows
     assert math.isclose(b0["wall_s"], 1.0) and math.isclose(b0["processed_s"], 0.4), b0
-    # covered: 0-350 and 400-450, so 600 ms idle
-    assert math.isclose(b0["idle_s"], 0.6), b0
+    # 50 ms before the read, 50 ms between completed and processed, 550 ms after
+    assert [round(b0[k], 6) for k in ("pre_s", "gap_s", "post_s")] == [0.05, 0.05, 0.55], b0
+    # a batch that only read its events is still a batch
     assert b2["processed_s"] is None, b2
-    # covered: 2000-2200 and 2500-2500.5
-    assert math.isclose(b2["idle_s"], 0.3), b2
+    assert [round(b2[k], 6) for k in ("pre_s", "gap_s", "post_s")] == [0.02, 0.0, 0.2], b2
+    # jobs cover 3000-3200 and 3500-3500.5 inside the batch
+    assert [round(b3[k], 6) for k in ("pre_s", "gap_s", "post_s")] == [0.0, 0.3, 0.0], b3
     text = report(rows)
-    assert text.splitlines()[-2].split() == ["median", "0.750", "0.400", "0.450", "4.000"], text
+    assert text.splitlines()[0].split() == ["batch", "wall_s", "processed_s", "pre_s", "gap_s", "post_s", "jobs"], text
+    assert text.splitlines()[-2].split() == ["median", "0.500", "0.400", "0.020", "0.050", "0.200", "3.000"], text
     assert covered_ms(0, 10, []) == 0
     print("stream_batches self-test: ok")
 
