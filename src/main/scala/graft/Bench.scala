@@ -55,6 +55,16 @@ object Bench {
         s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'"))
     }
 
+  /** The fixture directory a `SPARK_GRAFT_SF_DIR` value names: the sf0.1
+    * set when unset, else an existing directory.
+    */
+  private[graft] def sfDir(raw: Option[String]): String = {
+    val dir = raw.getOrElse("/root/testdata/sf0.1")
+    require(dir.nonEmpty && java.nio.file.Files.isDirectory(java.nio.file.Paths.get(dir)),
+      s"SPARK_GRAFT_SF_DIR must name an existing directory, got '$dir'")
+    dir
+  }
+
   /** The queries a `SPARK_GRAFT_ONLY` value selects (comma-separated
     * names, blanks around a name ignored): all of them when unset, else
     * a non-empty set of [[SparkEntry.queries]] names.
@@ -226,7 +236,7 @@ object Bench {
     catch { case _: Throwable => Seq.empty }
 
   def main(args: Array[String]): Unit = RunnerLock.withLock {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val sfDir = Bench.sfDir(sys.env.get("SPARK_GRAFT_SF_DIR"))
     // local-iteration hook; a bad name fails before the session starts
     val only = Bench.only(sys.env.get("SPARK_GRAFT_ONLY"))
     val spark = session()

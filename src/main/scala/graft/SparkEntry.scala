@@ -818,11 +818,12 @@ object SparkEntry {
 
   private val W = OracleCtes.all
 
-  /** Integer PageRank unrolled to fixed iterations — pure integer division
-    * throughout, so DuckDB replays the Spark fixpoint exactly.
+  /** Integer PageRank unrolled to the engine's [[PageRankIterations]]
+    * rounds — pure integer division throughout, so DuckDB replays the
+    * Spark fixpoint exactly.
     */
   private def codePageRankOracleSql: String = {
-    val iters = (1 to 3).map { k =>
+    val iters = (1 to PageRankIterations).map { k =>
       s"""pr$k AS (
          |  SELECT nd.node, (SELECT base FROM consts) + (85 * coalesce(s.c, 0)) // 100 AS r
          |  FROM nodes nd LEFT JOIN (
@@ -848,7 +849,7 @@ object SparkEntry {
        |  FROM nodes),
        |pr0 AS (SELECT node, (SELECT init FROM consts) AS r FROM nodes),
        |$iters
-       |SELECT node, cast(r AS bigint) AS rank_e9 FROM pr3""".stripMargin
+       |SELECT node, cast(r AS bigint) AS rank_e9 FROM pr$PageRankIterations""".stripMargin
   }
 
   /** DuckDB oracle for each query; same column names/types as the Spark

@@ -167,53 +167,39 @@ object ImporterPipeline {
       .filter(col("node_id") =!= "" || col("ord").isNotNull)
       .select(col("instance_id"), col("name"), col("option"), col("node_id"), col("ord"))
 
-  // ---- P7 + J3: time-exclusion filter + edge-construction join ----------
-  // Reference handler/incoming_instance_handler.go:294-302 — no code
-  // relationship for the "time" dimension ("temp hack"); inner broadcast
-  // join resolves the code node.
+  /** Iterations of [[codePageRank]]; the DuckDB oracle unrolls the same
+    * count, so the two plans cannot drift.
+    */
+  val PageRankIterations = 3
+
   /** Integer-arithmetic PageRank over the undirected option↔code graph —
     * graph-analytics depth past degrees (s7) and components (d8). Ranks
     * are e9-scaled integers and every update is integer division
-    * (`r div outdeg`, `(85·c) div 100`), so a fixed iteration count is a
-    * pure integer fixpoint both engines replay bit-for-bit — no float
-    * drift, no convergence nondeterminism.
+    * (`r div outdeg`, `(85·c) div 100`), so [[PageRankIterations]] rounds
+    * are a pure integer fixpoint both engines replay bit-for-bit — no
+    * float drift, no convergence nondeterminism.
     *
-    * Fixed iteration counts are UNROLLED into one lazy DAG (the same
-    * pr0→prN chain the DuckDB oracle uses): zero driver-side actions —
-    * even the node count becomes a 1-row broadcast frame — so the whole
-    * computation is a single Spark job, and exchange reuse dedupes the
-    * edge/degree shuffles across iterations. Above
-    * [[MaxUnrolledIterations]] the call delegates to
-    * [[codePageRankIterative]] — a caller cannot accidentally build an
-    * unbounded analysis/optimization plan by passing a large count.
+    * The rounds are UNROLLED into one lazy DAG (the pr0→prN chain the
+    * DuckDB oracle uses): zero driver-side actions — even the node count
+    * is a 1-row broadcast frame — so the whole computation is a single
+    * Spark job, and exchange reuse dedupes the edge/degree shuffles across
+    * rounds. The edge list enters that DAG through one LAZY
+    * `localCheckpoint`, named `pagerank edges`: every round references the
+    * edges, and without the cut the logical plan re-inlined the whole
+    * codeEdges/dedup subtree into each branch — Catalyst analysis alone
+    * cost ~1.0 s of g5's 3.0 s at sf0.1 (r17 QueryProfile: plan=1.00 s →
+    * 0.07 s after). Under AQE the cut runs its plan's shuffle map stages
+    * at the call, so the name is in force there.
     */
-  def codePageRank(dedup: DataFrame, codeLists: DataFrame, iterations: Int = 3): DataFrame =
-    if (iterations > MaxUnrolledIterations)
-      codePageRankIterative(dedup, codeLists, iterations)
-    else codePageRankUnrolled(dedup, codeLists, iterations)
-
-  /** Unrolling cap for [[codePageRank]]: each unrolled iteration adds two
-    * joins and an aggregate to ONE lazy plan, and Catalyst analysis cost
-    * grows superlinearly in plan depth — past this depth the checkpointed
-    * loop wins regardless of the per-round materialization it pays.
-    */
-  val MaxUnrolledIterations = 8
-
-  private def codePageRankUnrolled(
-      dedup: DataFrame, codeLists: DataFrame, iterations: Int): DataFrame = {
-    // LAZY localCheckpoint on the edge list (the g9 pattern): the unrolled
-    // chain references the edges in every branch of every iteration
-    // (contrib 2x, outdeg, nodes, consts), so the LOGICAL plan re-inlined
-    // the whole codeEdges/dedup subtree ~3x more per round — Catalyst
-    // analysis alone cost ~1.0 s of g5's 3.0 s at sf0.1 (r17 QueryProfile:
-    // plan=1.00 s → 0.07 s after). Physical work is unchanged: exchange
-    // reuse already dedup'd the edge shuffles; the checkpoint just
-    // truncates the plan the optimizer must chew per round.
-    val e0 = codeEdges(dedup, codeLists).select(col("src"), col("dst"))
-      .localCheckpoint(false)
+  def codePageRank(dedup: DataFrame, codeLists: DataFrame): DataFrame = {
+    val e0 = graft.SparkJobs.named(dedup.sparkSession, "pagerank edges")(
+      codeEdges(dedup, codeLists).select(col("src"), col("dst")).localCheckpoint(false))
     val edges = e0.unionAll(e0.select(col("dst").as("src"), col("src").as("dst")))
     val outdeg = edges.groupBy(col("src")).agg(count(lit(1)).as("od"))
-    val nodes = edges.select(col("src").as("node")).distinct()
+    // every node of the symmetric edge set is the src of some edge
+    val nodes = outdeg.select(col("src").as("node"))
+    // each edge carries its source's out-degree; the rounds join only ranks
+    val weighted = edges.join(outdeg, "src")
     // rank constants as a 1-row broadcast frame instead of a driver count():
     // keeps the whole computation one job with no eager materialization
     val consts = nodes.agg(
@@ -221,10 +207,9 @@ object ImporterPipeline {
       expr("(15 * (1000000000L div greatest(1L, count(1)))) div 100").as("base"))
     var ranks = nodes.crossJoin(broadcast(consts))
       .select(col("node"), col("init").as("r"))
-    for (_ <- 0 until iterations) {
-      val contrib = edges
-        .join(ranks, edges("src") === ranks("node"))
-        .join(outdeg, "src")
+    for (_ <- 1 to PageRankIterations) {
+      val contrib = weighted
+        .join(ranks, weighted("src") === ranks("node"))
         .select(col("dst"), expr("r div od").as("c"))
         .groupBy(col("dst")).agg(sum(col("c")).as("csum"))
       ranks = nodes
@@ -237,42 +222,10 @@ object ImporterPipeline {
     ranks.select(col("node"), col("r").as("rank_e9"))
   }
 
-  /** Loop form of [[codePageRank]] for variable or large iteration
-    * counts, where per-round `localCheckpoint` bounds the plan instead of
-    * unrolling.
-    */
-  def codePageRankIterative(
-      dedup: DataFrame, codeLists: DataFrame, iterations: Int): DataFrame = {
-    val e0 = codeEdges(dedup, codeLists).select(col("src"), col("dst"))
-    val edges = e0.unionAll(e0.select(col("dst").as("src"), col("src").as("dst"))).cache()
-    // both are re-read every iteration — cache so each round only runs the
-    // contribution join + aggregate
-    val outdeg = edges.groupBy(col("src")).agg(count(lit(1)).as("od")).cache()
-    val nodes = edges.select(col("src").as("node")).distinct().cache()
-    val n = nodes.count() // one scalar driver agg, like the TF-IDF N
-    val init = 1000000000L / math.max(1L, n)
-    val base = (15L * init) / 100L
-    var ranks = nodes.withColumn("r", lit(init)).localCheckpoint()
-    for (_ <- 0 until iterations) {
-      val contrib = edges
-        .join(ranks, edges("src") === ranks("node"))
-        .join(outdeg, "src")
-        .select(col("dst"), expr("r div od").as("c"))
-        .groupBy(col("dst")).agg(sum(col("c")).as("csum"))
-      ranks = nodes
-        .join(contrib, nodes("node") === contrib("dst"), "left")
-        .select(
-          col("node"),
-          (lit(base) + expr(s"(85 * coalesce(csum, 0L)) div 100")).as("r"))
-        .localCheckpoint()
-    }
-    // ranks is checkpointed, so the lineage no longer needs the caches
-    edges.unpersist()
-    outdeg.unpersist()
-    nodes.unpersist()
-    ranks.select(col("node"), col("r").as("rank_e9"))
-  }
-
+  // ---- P7 + J3: time-exclusion filter + edge-construction join ----------
+  // Reference handler/incoming_instance_handler.go:294-302 — no code
+  // relationship for the "time" dimension ("temp hack"); inner broadcast
+  // join resolves the code node.
   def codeEdges(dedup: DataFrame, codeLists: DataFrame): DataFrame =
     dedup
       .withColumn("name", nameCol)

@@ -15,7 +15,7 @@ package graft.tools
   */
 object AmortizationTable {
   def main(args: Array[String]): Unit = {
-    val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val dir = graft.Bench.sfDir(sys.env.get("SPARK_GRAFT_SF_DIR"))
     val spark = graft.Bench.session()
     spark.sparkContext.setLogLevel("ERROR")
 

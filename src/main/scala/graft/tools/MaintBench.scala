@@ -23,7 +23,7 @@ import graft.streaming.OnlineGate
   */
 object MaintBench {
   def main(args: Array[String]): Unit = {
-    val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val dir = graft.Bench.sfDir(sys.env.get("SPARK_GRAFT_SF_DIR"))
     val k = sys.env.getOrElse("SPARK_GRAFT_MAINT_K", "8").toInt
     val spark = graft.Bench.session()
     spark.sparkContext.setLogLevel("ERROR")

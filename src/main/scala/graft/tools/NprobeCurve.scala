@@ -11,7 +11,7 @@ package graft.tools
   */
 object NprobeCurve {
   def main(args: Array[String]): Unit = {
-    val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val dir = graft.Bench.sfDir(sys.env.get("SPARK_GRAFT_SF_DIR"))
     // THE bench session — the committed curve must be measured under the
     // graded bench's exact engine configuration (AQE changes the
     // post-shuffle plan of ivfTopK), so share the builder, never copy it

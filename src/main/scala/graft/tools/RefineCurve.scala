@@ -14,7 +14,7 @@ package graft.tools
   */
 object RefineCurve {
   def main(args: Array[String]): Unit = {
-    val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val dir = graft.Bench.sfDir(sys.env.get("SPARK_GRAFT_SF_DIR"))
     // the committed curve must be measured under the graded bench's exact
     // engine configuration — share the builder, never copy it
     val spark = graft.Bench.session()

@@ -36,6 +36,18 @@ class ConfigFailFastSpec extends SparkSuite {
     }
   }
 
+  test("SPARK_GRAFT_SF_DIR: a missing directory fails naming the variable and the value") {
+    assert(Bench.sfDir(None).endsWith("sf0.1"))
+    assert(Bench.sfDir(Some(sf0001)) === sf0001)
+    val file = java.nio.file.Files.createTempFile("sf-dir", ".parquet").toFile
+    file.deleteOnExit()
+    for (bad <- Seq(s"$sf0001-missing", file.toString, "")) {
+      val e = intercept[IllegalArgumentException](Bench.sfDir(Some(bad)))
+      assert(e.getMessage.contains("SPARK_GRAFT_SF_DIR"), e.getMessage)
+      assert(e.getMessage.contains(s"'$bad'"), e.getMessage)
+    }
+  }
+
   test("SPARK_GRAFT_ONLY: names are trimmed; an unknown name fails naming the variable and the name") {
     assert(Bench.only(None) === None)
     assert(Bench.only(Some("a3_dedup_options, flagship_updates")) ===

@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.Join
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 import graft.operators.ImporterPipeline._
@@ -125,16 +127,69 @@ class ImporterPipelineSpec extends SparkSuite {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
-  test("g5 unrolled PageRank DAG equals the checkpointed loop form") {
-    val dims = dedupOptions(validDimensions(projectDimensions(apiDims)))
-    def toMap(df: DataFrame) =
-      df.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val unrolled = toMap(codePageRank(dims, codeLists, iterations = 3))
-    val looped = toMap(codePageRankIterative(dims, codeLists, iterations = 3))
-    assert(unrolled.nonEmpty)
-    assert(unrolled === looped)
+  /** Options of one code list across 8 dimensions of instance `i`:
+    * dimension `dj` holds options 0 to 5+6j, so code `ok` is shared by
+    * 1 to 8 options and the out-degrees differ. 216 rows over 4
+    * partitions.
+    */
+  private val sharedCodeRows = (0 until 8).map(j => 6 + 6 * j).sum
+
+  private def sharedCodeDims: DataFrame =
+    spark.range(0L, 400L, 1L, 4)
+      .select((col("id") % 8).as("j"), (col("id") / 8).cast("long").as("k"))
+      .filter(col("k") <= lit(5) + lit(6) * col("j"))
+      .select(
+        lit("i").as("instance_id"),
+        concat(lit("i_d"), col("j").cast("string")).as("dimension_id"),
+        concat(lit("o"), col("k").cast("string")).as("option"),
+        lit("cl").as("code_list_id"))
+
+  private def sharedCodeLists: DataFrame =
+    (0 until 50).map(k => ("cl", s"o$k", Option(k))).toDF("code_list_id", "code", "ord")
+
+  test("g5 PageRank equals a driver-side integer PageRank over the code edges") {
+    val dims = sharedCodeDims
+    val got = codePageRank(dims, sharedCodeLists)
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    // the same e9 integer arithmetic, over the collected edge rows
+    val e0 = codeEdges(dims, sharedCodeLists).select("src", "dst")
+      .as[(String, String)].collect().toSeq
+    val edges = e0 ++ e0.map(_.swap)
+    val od = edges.groupMapReduce(_._1)(_ => 1L)(_ + _)
+    val init = 1000000000L / math.max(1L, od.size.toLong)
+    val base = 15L * init / 100L
+    val expected = (1 to PageRankIterations).foldLeft(od.map { case (n, _) => n -> init }) {
+      (r, _) =>
+        val c = edges.groupMapReduce(_._2) { case (s, _) => r(s) / od(s) }(_ + _)
+        od.map { case (n, _) => n -> (base + 85L * c.getOrElse(n, 0L) / 100L) }
+    }
+    assert(got.nonEmpty)
+    assert(got === expected)
     // every node keeps at least the base (teleport) mass
-    assert(unrolled.values.forall(_ > 0L))
+    assert(got.values.forall(_ > 0L))
+  }
+
+  test("g5 PageRank evaluates each dimension row once") {
+    // the unrolled plan reads the edge list from several stages of one
+    // job; its one cut must keep the dimension pipeline from re-running.
+    // A nondeterministic tap counts the rows the input produced.
+    val reads = spark.sparkContext.longAccumulator("dimension rows read")
+    val tap = udf { () => reads.add(1L); true }.asNondeterministic()
+    val ranks = codePageRank(sharedCodeDims.filter(tap()), sharedCodeLists).collect()
+    assert(reads.value === sharedCodeRows.toLong,
+      "the dimension input was evaluated more than once")
+    assert(ranks.length === sharedCodeRows + 48) // option nodes + codes o0..o47
+  }
+
+  test("g5 plan reads its edge list through the cut") {
+    // the code-list join sits inside the cut; without it the analyzed
+    // plan re-inlines that join into every branch of every iteration
+    val plan = codePageRank(sharedCodeDims, sharedCodeLists).queryExecution.analyzed
+    assert(plan.collect { case r: LogicalRDD => r }.nonEmpty, "no edge cut in the plan")
+    val codeJoins = plan.collect {
+      case j: Join if j.condition.exists(_.references.exists(_.name == "code")) => j
+    }
+    assert(codeJoins.isEmpty, s"${codeJoins.size} code-list joins outside the cut")
   }
 
   test("A5 bounded variant caps a skewed instance's digest and surfaces the overflow") {
@@ -155,20 +210,5 @@ class ImporterPipelineSpec extends SparkSuite {
     assert(small.getLong(1) === a5.getLong(1))
     assert(small.getString(2) === a5.getString(2))
     assert(small.getInt(3) === 0)
-  }
-
-  test("g5 above the unrolling cap delegates to the checkpointed loop — plan stays bounded") {
-    val dims = dedupOptions(validDimensions(projectDimensions(apiDims)))
-    def planLines(df: DataFrame): Int =
-      df.queryExecution.logical.numberedTreeString.linesIterator.size
-    val capped = codePageRank(dims, codeLists,
-      iterations = MaxUnrolledIterations + 4)
-    val unrolled3 = codePageRank(dims, codeLists, iterations = 3)
-    // the checkpointed loop ends in a bounded scan of materialized ranks;
-    // a 12-iteration plan LARGER than the 3-iteration unrolled DAG would
-    // mean the delegation regressed and the plan grows per iteration again
-    assert(planLines(capped) < planLines(unrolled3),
-      s"plan above the cap (${planLines(capped)} lines) must be smaller " +
-        s"than the 3-iteration unrolled DAG (${planLines(unrolled3)} lines)")
   }
 }
