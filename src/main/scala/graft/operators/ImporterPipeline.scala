@@ -19,7 +19,8 @@ import org.apache.spark.sql.functions._
   *   - Nothing collects to the driver; all sinks are DataFrames.
   *   - Streaming (`ImporterStream`): the dims → updates chain is derived
   *     once per query and each micro-batch semi-joins it to its new
-  *     instances, so a batch no longer scans the dimensions source.
+  *     instances, so a batch no longer scans the dimensions source; its
+  *     tens of output rows are collected and written from the driver.
   */
 object ImporterPipeline {
 

@@ -420,8 +420,8 @@ object LmScore {
     // fires. The checkpointed pair frame is ≤ |docs|·DsirBuckets rows
     // (distinct pairs), far below the exploded occ volume, so storing it
     // is the cheap side of the trade at any scale.
-    val pairs = occ.groupBy(col("b"), col("doc_id")).agg(count(lit(1)).as("cnt"))
-      .localCheckpoint(false)
+    val pairs = graft.SparkJobs.named(spark, "dsir bucket pairs")(
+      occ.groupBy(col("b"), col("doc_id")).agg(count(lit(1)).as("cnt")).localCheckpoint(false))
     val counts = pairs
       .groupBy(col("b"))
       .agg(

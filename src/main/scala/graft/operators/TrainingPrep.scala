@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.SparkJobs.named
 import graft.sources.Fixtures.{table, tableParallel}
 
 /** Training-data preparation operators over `documents` — the steps between
@@ -769,7 +770,7 @@ object TrainingPrep {
     // of once per branch (ReusedExchange does not cover all four shapes;
     // measured 10.2 → ~4 s at sf0.1). Lazy, so the materialization fuses
     // into the first downstream job — the g9 pattern.
-    val docs = docsIn.localCheckpoint(false)
+    val docs = named(docsIn.sparkSession, "run manifest selection")(docsIn.localCheckpoint(false))
     val mixed = mixtureSelectionOf(
       docs.select(col("doc_id"), col("source"), col("n_tokens")))
     val epochs = epochScheduleOf(
@@ -808,8 +809,8 @@ object TrainingPrep {
   def runManifestBpe(spark: SparkSession, dir: String): DataFrame = {
     // sel feeds two branches (the survivor semi-join and the final meta
     // join) — materialize the t65 gate chain once (the g9 pattern)
-    val sel = productionSelection(spark, dir)
-      .select(col("doc_id"), col("quality_e4")).localCheckpoint(false)
+    val production = productionSelection(spark, dir).select(col("doc_id"), col("quality_e4"))
+    val sel = named(spark, "bpe run manifest selection")(production.localCheckpoint(false))
     val perDoc = table(spark, dir, "documents")
       .join(sel.select(col("doc_id")), Seq("doc_id"), "left_semi")
       .select(col("doc_id"), col("source"),
@@ -996,7 +997,8 @@ object TrainingPrep {
       spark: SparkSession, dir: String, labels: DataFrame): DataFrame = {
     // sel feeds two branches (the weights join and the manifest chain) —
     // materialize the gate chain once (the g9 pattern)
-    val sel = softSelectionBase(spark, dir).localCheckpoint(false)
+    val base = softSelectionBase(spark, dir)
+    val sel = named(spark, "soft run manifest selection")(base.localCheckpoint(false))
     runManifestSoftOf(
       sel.join(softDedupWeightsOf(sel.select(col("doc_id")), labels)
           .select(col("doc_id"), col("weight_e4")), Seq("doc_id"))
@@ -1012,7 +1014,7 @@ object TrainingPrep {
     * epochs and weighting all run over `eff_tokens`.
     */
   private[graft] def runManifestSoftOf(docsIn: DataFrame): DataFrame = {
-    val docs = docsIn.localCheckpoint(false)
+    val docs = named(docsIn.sparkSession, "soft manifest selection")(docsIn.localCheckpoint(false))
     val mixed = docs
       .join(broadcast(temperedRatesOf(
         docs.groupBy(col("source")).agg(sum(col("eff_tokens")).as("toks")))),

@@ -1,19 +1,17 @@
 package graft.streaming
 
-import scala.concurrent.{Await, Future}
-import scala.concurrent.duration.Duration
 import scala.jdk.CollectionConverters._
-import scala.util.Try
 import scala.util.control.NonFatal
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.SparkJobs.{async, named}
+import graft.SparkJobs.named
 import graft.model.Schemas.ProcessedSchema
 import graft.operators.ImporterPipeline._
+import graft.sinks.LocalParquet
 
 /** Streaming shell for the importer pipeline (SURVEY.md §2.6): the same
   * batch DAG applied per micro-batch under `foreachBatch`, with
@@ -25,8 +23,9 @@ import graft.operators.ImporterPipeline._
   *     `processed_instances` table is the durable copy of the set.
   *   - dead-letter side output (ST4): invalid events appended to an errors
   *     table instead of being dropped; a batch with none writes nothing.
-  *   - multi-sink fan-out: updates + completed + errors parquet appends per
-  *     micro-batch (stand-ins for graph DB, Kafka out, report topic).
+  *   - multi-sink fan-out: updates + completed + errors parquet files per
+  *     micro-batch (stand-ins for graph DB, Kafka out, report topic),
+  *     written from the driver (see [[processBatch]]).
   *
   * In production the source would be `spark.readStream.format("kafka")` +
   * `from_avro(value, schema)` (reference `schema/schema.go:7-26`); tests
@@ -136,14 +135,20 @@ object ImporterStream {
     * static side's updates for the new instances → sinks. Public so tests
     * can drive a single batch synchronously.
     *
-    * The batch is read once, by one collect: the Spark driver holds one
-    * batch's rows, as many as the source delivers per trigger (a Kafka
-    * source bounds that with its own `maxOffsetsPerTrigger`). Validation, the
-    * dead-letter check and the processed lookup run on that local relation
-    * and start no job. A failed read leaves `processBatch` and marks
-    * nothing.
+    * Two Spark jobs per batch: one collect reads the batch (`importer
+    * batch`), and one collects its updates from the static side (`importer
+    * updates`). The Spark driver holds one batch's rows, as many as the
+    * source delivers per trigger (a Kafka source bounds that with its own
+    * `maxOffsetsPerTrigger`), and that batch's update rows, as the
+    * reference holds an instance's whole dimension list before inserting it
+    * (client/dimensions_api.go:82-97). Validation, the dead-letter check and
+    * the processed lookup run on the collected rows and start no job. A
+    * failed read leaves `processBatch` and marks nothing.
     *
-    * Sink contract: `updates`/`completed` are written to a
+    * Sink contract: every sink is written from the driver, one parquet
+    * file per sink per batch ([[graft.sinks.LocalParquet]]: a hidden
+    * temporary name, then a rename), with no Spark write job; the outputs
+    * are tens to hundreds of rows. `updates`/`completed` are written to a
     * `run=<runNs>/batch_id=<id>` subdirectory with overwrite, so a
     * same-checkpoint redelivery of a partially-written batch (a crash
     * between its writes) REPLACES the partial output instead of appending
@@ -152,19 +157,13 @@ object ImporterStream {
     * ids restart at 0) lands in its own namespace and never clobbers a
     * previous life's output on shared sinks.
     *
-    * The batch's independent writes overlap, as the reference's per-insert
-    * goroutines behind one `WaitGroup` do
-    * (handler/incoming_instance_handler.go:148-184): the dead-letter write,
-    * when the batch has a malformed event, starts before everything else,
-    * and `updates` runs beside `completed`.
-    * One barrier waits for all of them, even after one fails; only then is
-    * `processed` appended, so it stays the last write. A failure anywhere
-    * leaves the events unmarked, and the failed delivery deletes its own
-    * `run=/batch_id=` output after the barrier: the redelivery comes under
-    * a new batch id, so output left behind would land twice. That cleanup
-    * makes the order of the overlapped writes irrelevant. A failed
-    * dead-letter write still leaves `processBatch` with its exception,
-    * after the same cleanup.
+    * The writes run in sequence: dead letters first, before anything that
+    * can fail, then `updates`, `completed` and, last, `processed`. A
+    * failure anywhere after the dead letters leaves the events unmarked,
+    * and the failed delivery deletes its own `run=/batch_id=` output: the
+    * redelivery comes under a new batch id, so output left behind would
+    * land twice. A failed dead-letter write leaves `processBatch` with its
+    * exception, before any other write.
     *
     * A replay whose events are ALL already processed (the crash landed
     * between the processed write and the checkpoint commit) writes
@@ -174,8 +173,6 @@ object ImporterStream {
     * duplicate error reports on redelivery are harmless and match the
     * reference's report-then-commit consumer
     * (message/kafka_message_receiver.go:44-50).
-    * Each sink gets one file per batch: the outputs are tens to hundreds
-    * of rows.
     */
   def processBatch(
       spark: SparkSession,
@@ -191,14 +188,12 @@ object ImporterStream {
     val events = spark.createDataFrame(
       named(spark, "importer batch")(batch.collect()).toSeq.asJava, batch.schema)
     val valid = validEvents(events)
-    val deadEvents = deadLetters(events)
 
-    // the dead-letter write starts first and runs beside everything below:
-    // its rows must reach the errors sink even if the pipeline body fails
-    val dead = if (deadEvents.isEmpty) None else Some(async(spark, "importer dead-letter sink") {
-      deadEvents.coalesce(1).write.mode("append").parquet(sinks.errors)
-    })
-    var writes = dead.toSeq
+    // dead letters first: their rows must reach the errors sink even if the
+    // pipeline body fails
+    val dead = deadLetters(events)
+    val deadRows = dead.collect()
+    if (deadRows.nonEmpty) LocalParquet.write(spark, sinks.errors, dead.schema, deadRows.toSeq, overwrite = false)
     // this delivery's per-batch outputs, once their writes have started
     var outputs = Seq.empty[String]
     // the batch's new events; every sink below and the error report read
@@ -223,25 +218,16 @@ object ImporterStream {
       if (ids.nonEmpty) {
         // a literal set, not a join: a broadcast of the ids would cost a job
         val updates = side.get.where(col("instance_id").isin(ids.distinct.toIndexedSeq: _*))
+        val updateRows = named(spark, "importer updates")(updates.collect())
         val updatesDir = s"${sinks.updates}/run=$runNs/batch_id=$batchId"
         val completedDir = s"${sinks.completed}/run=$runNs/batch_id=$batchId"
         outputs = Seq(updatesDir, completedDir)
-        writes ++= Seq(
-          async(spark, "importer updates sink") {
-            updates.coalesce(1).write.mode("overwrite").parquet(updatesDir)
-          },
-          async(spark, "importer completed sink") {
-            completedEvents(newEvents).coalesce(1).write.mode("overwrite").parquet(completedDir)
-          })
-      }
-      barrier(writes).foreach(_.get)
-      // processed is written LAST, after the barrier: a failure in any
-      // write above leaves the events unmarked, so redelivery retries them
-      // (at-least-once).
-      if (ids.nonEmpty) {
-        named(spark, "importer processed sink") {
-          newEvents.select("instance_id").coalesce(1).write.mode("append").parquet(sinks.processed)
-        }
+        LocalParquet.write(spark, updatesDir, updates.schema, updateRows.toSeq, overwrite = true)
+        val completed = completedEvents(newEvents)
+        LocalParquet.write(spark, completedDir, completed.schema, completed.collect().toSeq, overwrite = true)
+        // processed is written LAST: a failure in any write above leaves
+        // the events unmarked, so redelivery retries them (at-least-once)
+        LocalParquet.write(spark, sinks.processed, ProcessedSchema, ids.map(Row(_)).toSeq, overwrite = false)
         processed.add(ids)
       }
     } catch {
@@ -252,17 +238,12 @@ object ImporterStream {
       // batch never wedges the consumer); the events stay out of
       // `processed`, so a later redelivery retries them.
       case NonFatal(e) =>
-        // no write of this delivery may land after its cleanup
-        barrier(writes)
         // the redelivery comes under a new batch id, so this delivery's
         // partial per-batch output must not outlive it
         outputs.foreach { d =>
           val p = new Path(d)
           p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
         }
-        // the errors sink itself failed, so this batch's failure cannot be
-        // reported there: it leaves processBatch, and nothing is marked
-        dead.foreach(_.value.get.failed.foreach(throw _))
         side.drop()
         processed.drop()
         val error = s"${e.getClass.getName}: ${Option(e.getMessage).getOrElse("")}".take(512)
@@ -272,22 +253,13 @@ object ImporterStream {
           case Some(df) => (df, "failed to process instance batch")
           case None => (valid, "failed to read processed-instances state")
         }
-        named(spark, "importer error sink") {
-          reported
-            .select(
-              col("file_url"), col("instance_id"),
-              lit(context).as("err_context"),
-              lit(error).as("error"))
-            .coalesce(1).write.mode("append").parquet(sinks.errors)
-        }
+        val report = reported.select(
+          col("file_url"), col("instance_id"),
+          lit(context).as("err_context"),
+          lit(error).as("error"))
+        LocalParquet.write(spark, sinks.errors, report.schema, report.collect().toSeq, overwrite = false)
     }
   }
-
-  /** Waits for every write, failed or not, so none lands after the caller
-    * goes on; returns their outcomes in order.
-    */
-  private def barrier(writes: Seq[Future[Unit]]): Seq[Try[Unit]] =
-    writes.map(w => Await.ready(w, Duration.Inf).value.get)
 
   /** Start the streaming query over an events stream DataFrame. */
   def start(

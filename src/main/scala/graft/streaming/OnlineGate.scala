@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener}
 
+import graft.SparkJobs.named
 import graft.operators.{Dedup, IvfAnn, ShingleIndex, TextAnalysis, TrainingPrep, VectorIndex}
 
 /** The ONLINE training-selection gate — the streaming composition of the
@@ -636,7 +637,7 @@ object OnlineGate {
     // final left-anti — so a lazy localCheckpoint materializes the whole
     // upstream chain once instead of twice (the g9/runManifestOf pattern;
     // lazy, so it fuses into the first downstream job)
-    val kept = kept0.localCheckpoint(false)
+    val kept = named(kept0.sparkSession, "decontamination kept")(kept0.localCheckpoint(false))
     val keptGrams = Dedup.gramHashes(
       docs.join(kept.select(col("doc_id")), Seq("doc_id"), "left_semi"))
     val evalGrams = Dedup.gramHashes(evalDocs).select(col("g")).distinct()
@@ -718,10 +719,10 @@ object OnlineGate {
       spark: SparkSession, shingleTable: String, outPath: String,
       docsWithSource: DataFrame, evalDocs: DataFrame): DataFrame = {
     // kept feeds two branches (weights join + manifest chain) — g9 pattern
-    val kept = decontaminatedOf(
-        cutTimeSelectionSoft(spark, shingleTable, outPath),
-        docsWithSource.select(col("doc_id"), col("text")), evalDocs)
-      .localCheckpoint(false)
+    val decontaminated = decontaminatedOf(
+      cutTimeSelectionSoft(spark, shingleTable, outPath),
+      docsWithSource.select(col("doc_id"), col("text")), evalDocs)
+    val kept = named(spark, "soft manifest kept")(decontaminated.localCheckpoint(false))
     val clusters = Dedup.clustersFromPairs(Dedup.jaccardPairsFromShingles(
       ShingleIndex.shingles(spark, shingleTable, includePlanted = true),
       Dedup.DefaultThreshold, Dedup.DefaultMaxDocFreq))
@@ -822,10 +823,11 @@ object OnlineGate {
       .agg(min(col("doc_id")).as("mn"), max(col("doc_id")).as("mx"))
       .filter(col("mn") === col("mx"))
       .select(col("mn").as("doc_id"))
-    val affected = priorSole
+    val affected0 = priorSole
       .unionByName(bIds) // every arrival needs its own fresh row
       .distinct()
-      .localCheckpoint(false) // feeds three plan branches (g9 pattern)
+    // feeds three plan branches (g9 pattern)
+    val affected = named(spark, "gate arrival affected docs")(affected0.localCheckpoint(false))
     stateRowsFrame(spark, shingleTable, outPath, affected,
       dead = bIds.limit(0))
   }
@@ -867,14 +869,14 @@ object OnlineGate {
     val dIds = deletedIds.select(col("doc_id"))
     val hd = ShingleIndex.segmentsOfDocsRaw(spark, shingleTable, dIds)
       .select(col("h")).distinct()
-    val affected = ShingleIndex.segments(spark, shingleTable)
+    val affected0 = ShingleIndex.segments(spark, shingleTable)
       .join(broadcast(hd), Seq("h"), "left_semi")
       .groupBy(col("h"))
       .agg(min(col("doc_id")).as("mn"), max(col("doc_id")).as("mx"))
       .filter(col("mn") === col("mx"))
       .select(col("mn").as("doc_id"))
       .distinct()
-      .localCheckpoint(false)
+    val affected = named(spark, "gate deletion affected docs")(affected0.localCheckpoint(false))
     stateRowsFrame(spark, shingleTable, outPath, affected, dead = dIds)
   }
 
@@ -908,9 +910,10 @@ object OnlineGate {
   private[graft] def stateRowsFrame(
       spark: SparkSession, shingleTable: String, outPath: String,
       affected: DataFrame, dead: DataFrame): DataFrame = {
-    val segsA = ShingleIndex.segments(spark, shingleTable)
+    val segsA0 = ShingleIndex.segments(spark, shingleTable)
       .join(broadcast(affected), Seq("doc_id"), "left_semi")
-      .localCheckpoint(false) // feeds the flag probe AND the dup rollup
+    // feeds the flag probe AND the dup rollup
+    val segsA = named(spark, "gate affected segments")(segsA0.localCheckpoint(false))
     val flagH = ShingleIndex.segments(spark, shingleTable)
       .join(broadcast(segsA.select(col("h")).distinct()), Seq("h"), "left_semi")
       .groupBy(col("h"))
@@ -1031,9 +1034,10 @@ object OnlineGate {
       quota: Int = Dedup.HostQuota): DataFrame = {
     // kept feeds the survivor semi-join and the final manifest join —
     // materialize the production-cut chain once (the g9 pattern)
-    val kept = cutProduction(spark, shingleTable, outPath,
+    val production = cutProduction(spark, shingleTable, outPath,
         docsWithSource.select(col("doc_id"), col("text")), evalDocs, hosts, quota)
-      .select(col("doc_id"), col("quality_e4")).localCheckpoint(false)
+      .select(col("doc_id"), col("quality_e4"))
+    val kept = named(spark, "bpe manifest kept")(production.localCheckpoint(false))
     // takedowns bind in the shipped tokenizer too: the vocabulary is
     // trained on the store MINUS the deletion log, so a taken-down
     // document's text cannot shape the merges a snapshot ships

@@ -1,49 +1,51 @@
 package graft
 
-import scala.concurrent.Await
-import scala.concurrent.duration._
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 
-import org.apache.spark.SparkException
+import scala.jdk.CollectionConverters._
 
-/** `SparkJobs.async`: the caller's job group reaches the pool thread, the
-  * body's own exception reaches the caller, and the caller's properties
-  * stay its own.
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+
+/** `SparkJobs.named`: the body's jobs carry the name as their description,
+  * and the caller's properties are its own again afterwards, also when the
+  * body throws.
   */
 class SparkJobsSpec extends SparkSuite {
-  import spark.implicits._
 
-  test("async runs under the caller's job group and its own name; failures surface unwrapped") {
+  test("named describes the body's jobs and restores the caller's properties") {
     val sc = spark.sparkContext
+    val Marker = "named spec marker"
+    val seen = new ConcurrentLinkedQueue[String]()
+    val markerSeen = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description"))).foreach { d =>
+          if (d == Marker) markerSeen.countDown() else seen.add(d)
+        }
+    }
     val callSite = sc.getLocalProperty("callSite.short")
-    sc.setJobGroup("graft-async-spec", "caller group")
+    sc.addSparkListener(listener)
     sc.setJobDescription("caller description")
     try {
-      val seen = Await.result(SparkJobs.async(spark, "async spec job") {
+      val n = SparkJobs.named(spark, "named spec job") {
+        assert(sc.getLocalProperty("callSite.short") === "named spec job")
         spark.range(3).count()
-        (sc.getLocalProperty("spark.jobGroup.id"), sc.getLocalProperty("spark.job.description"),
-          sc.getLocalProperty("callSite.short"))
-      }, 60.seconds)
-      assert(seen === (("graft-async-spec", "async spec job", "async spec job")))
-
-      val boom = new IllegalStateException("boom")
-      val thrown = intercept[IllegalStateException] {
-        Await.result(SparkJobs.async(spark, "async spec failure")(throw boom), 60.seconds)
       }
-      assert(thrown eq boom)
-      // a failed Spark job reaches the caller as Spark's own exception
-      intercept[SparkException] {
-        Await.result(SparkJobs.async(spark, "async spec failed job") {
-          spark.range(1).as[Long].map(i => if (i >= 0) throw new IllegalStateException("task") else i)
-            .collect()
-        }, 60.seconds)
-      }
-
+      assert(n === 3)
+      intercept[IllegalStateException](SparkJobs.named(spark, "named spec failure") {
+        throw new IllegalStateException("boom")
+      })
       assert(sc.getLocalProperty("spark.job.description") === "caller description")
       assert(sc.getLocalProperty("callSite.short") === callSite)
-      assert(sc.getLocalProperty("spark.jobGroup.id") === "graft-async-spec")
+      // the listener bus is ordered: once the marker job is reported,
+      // every earlier job has been
+      sc.setJobDescription(Marker)
+      spark.range(1).collect()
+      assert(markerSeen.await(60, TimeUnit.SECONDS), "the marker job never reached the listener")
     } finally {
-      sc.clearJobGroup()
       sc.setJobDescription(null)
+      sc.removeSparkListener(listener)
     }
+    assert(seen.asScala.toSeq.contains("named spec job"), seen)
   }
 }

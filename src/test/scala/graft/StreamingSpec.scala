@@ -492,28 +492,25 @@ class StreamingSpec extends SparkSuite {
     sinkFailingOnKDeliveries("completed")
   }
 
-  private final case class Job(name: String, batch: String, group: String, query: String, start: Long)
+  private final case class Job(name: String, batch: String, group: String, query: String)
 
   /** Runs `batches` through a fresh `ImporterStream` query into `outDir`,
     * one `processAllAvailable` each, and returns the query with the
-    * `importer …` jobs it started (by job id) and every job's end time.
+    * `importer …` jobs it started (by job id).
     */
   private def importerJobs(outDir: String, batches: Seq[Seq[(String, String)]])
-      : (StreamingQuery, Map[Int, Job], Map[Int, Long]) = {
+      : (StreamingQuery, Map[Int, Job]) = {
     val Marker = "graft importer job marker"
     val jobs = new ConcurrentHashMap[Int, Job]()
-    val ends = new ConcurrentHashMap[Int, Long]()
     val markerEnded = new CountDownLatch(1)
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
         def prop(k: String) = Option(e.properties).flatMap(p => Option(p.getProperty(k))).getOrElse("")
         jobs.put(e.jobId, Job(prop("spark.job.description"), prop("streaming.sql.batchId"),
-          prop("spark.jobGroup.id"), prop("sql.streaming.queryId"), e.time))
+          prop("spark.jobGroup.id"), prop("sql.streaming.queryId")))
       }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit = {
-        ends.put(e.jobId, e.time)
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
         if (Option(jobs.get(e.jobId)).exists(_.name == Marker)) markerEnded.countDown()
-      }
     }
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(String, String)]
@@ -536,48 +533,48 @@ class StreamingSpec extends SparkSuite {
       assert(markerEnded.await(60, TimeUnit.SECONDS), "the marker job never reached the listener")
       q
     } finally spark.sparkContext.removeSparkListener(listener)
-    (q, jobs.asScala.toMap.filter(_._2.name.startsWith("importer")), ends.asScala.toMap)
+    (q, jobs.asScala.toMap.filter(_._2.name.startsWith("importer")))
   }
 
-  test("a batch's writes overlap under the query's job group; processed starts after the others end") {
-    val outDir = Files.createTempDirectory("overlap-out").toString
-    val (q, importer, ends) = importerJobs(outDir, Seq(Seq(("/a", "A"), ("/bad", "")), Seq(("/b", "B"))))
+  test("a batch starts only its read and updates collect, under the query's job group") {
+    val outDir = Files.createTempDirectory("batch-jobs-out").toString
+    val (q, importer) = importerJobs(outDir, Seq(Seq(("/a", "A"), ("/bad", "")), Seq(("/b", "B"))))
     assert(importer.nonEmpty)
     importer.foreach { case (id, j) =>
       assert(j.group === q.runId.toString, s"job $id ($j) left the query's job group")
       assert(j.query === q.id.toString, s"job $id ($j)")
     }
-    val sinkJobs = Set("importer dead-letter sink", "importer updates sink", "importer completed sink")
     val byBatch = importer.toSeq.groupBy(_._2.batch)
     assert(byBatch.keySet === Set("0", "1"), byBatch)
-    // the batch is read by one job; batch 1 has no malformed event, so no
-    // dead-letter write; the static side is derived on batch 0 only
+    // the batch is read by one job and its updates collected by another;
+    // the sinks are written from the driver, so no write job starts; the
+    // static side is derived on batch 0 only
     val expected = Map(
-      "0" -> (sinkJobs ++ Set("importer batch", "importer processed sink", "importer static side")),
-      "1" -> Set("importer batch", "importer updates sink", "importer completed sink", "importer processed sink"))
+      "0" -> Set("importer batch", "importer static side", "importer updates"),
+      "1" -> Set("importer batch", "importer updates"))
     for ((batch, batchJobs) <- byBatch) {
       val names = batchJobs.map(_._2.name)
       assert(names.toSet === expected(batch), s"batch $batch")
-      assert(!names.contains("importer new events"), s"batch $batch")
       assert(names.count(_ == "importer batch") === 1, s"batch $batch read its source more than once")
-      val Seq(processedStart) = batchJobs.collect { case (_, j) if j.name == "importer processed sink" => j.start }
-      for ((id, j) <- batchJobs if sinkJobs(j.name))
-        assert(ends.get(id).exists(_ <= processedStart),
-          s"batch $batch: ${j.name} did not end before the processed sink started")
+      assert(names.count(_ == "importer updates") === 1, s"batch $batch")
     }
+    // every sink's output is there
+    for (sink <- Seq("updates", "completed", "processed_instances", "errors"))
+      assert(spark.read.parquet(s"$outDir/$sink").count() > 0, sink)
   }
 
   test("a batch with no malformed event writes no errors file and starts no dead-letter job") {
     val outDir = Files.createTempDirectory("no-dead-out").toString
     val sinks = ImporterStream.Sinks(outDir)
-    val (_, clean, _) = importerJobs(outDir, Seq(Seq(("/a", "A"), ("/b", "B"))))
-    assert(clean.values.map(_.name).toSet.contains("importer completed sink"), clean)
-    assert(!clean.values.exists(_.name == "importer dead-letter sink"), clean)
+    val (_, clean) = importerJobs(outDir, Seq(Seq(("/a", "A"), ("/b", "B"))))
+    assert(clean.values.map(_.name).toSet === Set("importer batch", "importer static side", "importer updates"),
+      clean)
     assert(!Files.exists(Paths.get(sinks.errors)), "a batch without dead letters wrote an errors file")
 
-    // one malformed event: exactly one dead-letter job and one row
-    val (_, withBad, _) = importerJobs(outDir, Seq(Seq(("/c", "A"), ("/bad", ""))))
-    assert(withBad.values.count(_.name == "importer dead-letter sink") === 1, withBad)
+    // one malformed event: exactly one errors file and row, and still no job
+    val (_, withBad) = importerJobs(outDir, Seq(Seq(("/c", "A"), ("/bad", ""))))
+    assert(!withBad.values.exists(_.name.endsWith("sink")), withBad)
+    assert(dataFiles(Paths.get(sinks.errors)) === 1)
     assert(spark.read.parquet(sinks.errors).select("file_url", "instance_id", "err_context")
       .as[(String, String, String)].collect().toSeq === Seq(("/bad", "", "unable to process message")))
   }
@@ -619,10 +616,10 @@ class StreamingSpec extends SparkSuite {
       (0 until 3).map(i => (s"/n$b-$i", s"N$b-$i")) ++ Seq((s"/old$b", s"old$b")) ++
         (if (b > 0) Seq((s"/n${b - 1}-0", s"N${b - 1}-0")) else Nil)
     }
-    val (_, importer, _) = importerJobs(outDir, batches)
+    val (_, importer) = importerJobs(outDir, batches)
     val perBatch = (0 until 6).map(b => importer.values.count(_.batch == b.toString))
     // batch 0 also seeds the set and derives the static side
-    assert(perBatch.tail === Seq.fill(5)(4), s"importer jobs per batch: $perBatch")
+    assert(perBatch.tail === Seq.fill(5)(2), s"importer jobs per batch: $perBatch")
     val completed = spark.read.parquet(s"$outDir/completed").select("instance_id").as[String].collect()
     assert(completed.sorted.toSeq === batches.flatMap(_.take(3).map(_._2)).sorted)
   }

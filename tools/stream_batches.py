@@ -8,15 +8,16 @@ Reads the spans file a traced run writes (`perfbench/run.py --trace 1`) and
 prints, for each non-empty batch (a batch span in which at least one
 `importer ...` job starts):
   - wall_s:      the batch span (the trigger execution);
-  - processed_s: when the `importer processed sink` job starts, from the
-                 batch start: every other write of the batch lies before it,
-                 so this is the batch's critical path ("-" when the batch
-                 marked nothing);
+  - processed_s: when the `importer updates` collect ends, from the batch
+                 start (clipped to the batch): the batch's last job, after
+                 which the driver writes its sinks, so this is the batch's
+                 critical path before those writes ("-" when the batch had
+                 no new instance);
   - pre_s:       batch start to the first job's start (offset log, planning);
   - gap_s:       time between the first job's start and the last job's end
                  that no job covers (Spark driver work between jobs);
-  - post_s:      the last job's end to the batch end (the processed commit's
-                 tail and the commit log);
+  - post_s:      the last job's end to the batch end (the driver's sink
+                 writes and the commit log);
   - jobs:        the jobs started in the batch.
 The medians over those batches close the listing.
 """
@@ -25,7 +26,7 @@ import math
 import statistics
 import sys
 
-PROCESSED = "importer processed sink"
+UPDATES = "importer updates"
 
 
 def covers(span, t):
@@ -57,13 +58,13 @@ def batches(spans_file):
         jobs = [j for j in spans_file["jobs"] if covers(b, j["start_ms"])]
         if not any(job_name(j).startswith("importer") for j in jobs):
             continue
-        marks = [j["start_ms"] for j in jobs if job_name(j) == PROCESSED]
+        marks = [min(j["end_ms"], b["end_ms"]) for j in jobs if job_name(j) == UPDATES]
         first = max(min(j["start_ms"] for j in jobs), b["start_ms"])
         last = min(max(j["end_ms"] for j in jobs), b["end_ms"])
         out.append({
             "batch": b["request"],
             "wall_s": (b["end_ms"] - b["start_ms"]) / 1000.0,
-            "processed_s": (min(marks) - b["start_ms"]) / 1000.0 if marks else None,
+            "processed_s": (max(marks) - b["start_ms"]) / 1000.0 if marks else None,
             "pre_s": (first - b["start_ms"]) / 1000.0,
             "gap_s": max(0.0, last - first - covered_ms(first, last, jobs)) / 1000.0,
             "post_s": (b["end_ms"] - last) / 1000.0,
@@ -95,27 +96,25 @@ def report(rows):
 SAMPLE = {
     "spans": [
         {"name": "tick", "request": "traced#tick0", "start_ms": 0.0, "end_ms": 1.0},
-        # batch 0: batch read 50-100, dead letters 100-200, updates 200-300,
-        # completed 250-350, processed 400-450; 1000 ms wall
+        # batch 0: batch read 50-100, static side 100-200, updates collect
+        # 250-300, then the driver's writes; 1000 ms wall
         {"name": "batch", "request": "batch#0", "start_ms": 0.0, "end_ms": 1000.0},
         # batch 1: empty trigger, no job
         {"name": "batch", "request": "batch#1", "start_ms": 1000.0, "end_ms": 1010.0},
         # batch 2: every event already processed, so only the batch read
         {"name": "batch", "request": "batch#2", "start_ms": 2000.0, "end_ms": 2300.0},
-        # batch 3: the pipeline failed after the read; its error write ends
-        # after the batch, so only the part inside counts
+        # batch 3: its updates collect ends after the batch, so only the
+        # part inside counts
         {"name": "batch", "request": "batch#3", "start_ms": 3000.0, "end_ms": 3500.5},
     ],
     "jobs": [
         {"start_ms": 50.0, "end_ms": 100.0, "stages": ["importer batch"]},
-        {"start_ms": 100.0, "end_ms": 200.0, "stages": ["importer dead-letter sink"]},
-        {"start_ms": 200.0, "end_ms": 300.0, "stages": ["importer updates sink"]},
-        {"start_ms": 250.0, "end_ms": 350.0, "stages": ["importer completed sink"]},
-        {"start_ms": 400.0, "end_ms": 450.0, "stages": [PROCESSED]},
+        {"start_ms": 100.0, "end_ms": 200.0, "stages": ["importer static side"]},
+        {"start_ms": 250.0, "end_ms": 300.0, "stages": [UPDATES]},
         {"start_ms": 2020.0, "end_ms": 2100.0, "stages": ["importer batch"]},
         {"start_ms": 3000.0, "end_ms": 3100.0, "stages": ["importer batch"]},
         {"start_ms": 3050.0, "end_ms": 3200.0, "stages": ["importer static side"]},
-        {"start_ms": 3500.0, "end_ms": 3600.0, "stages": ["importer error sink"]},
+        {"start_ms": 3500.0, "end_ms": 3600.0, "stages": [UPDATES]},
     ],
 }
 
@@ -124,14 +123,16 @@ def self_test():
     rows = batches(SAMPLE)
     assert [r["batch"] for r in rows] == ["batch#0", "batch#2", "batch#3"], rows
     b0, b2, b3 = rows
-    assert [r["jobs"] for r in rows] == [5, 1, 3], rows
-    assert math.isclose(b0["wall_s"], 1.0) and math.isclose(b0["processed_s"], 0.4), b0
-    # 50 ms before the read, 50 ms between completed and processed, 550 ms after
-    assert [round(b0[k], 6) for k in ("pre_s", "gap_s", "post_s")] == [0.05, 0.05, 0.55], b0
+    assert [r["jobs"] for r in rows] == [3, 1, 3], rows
+    assert math.isclose(b0["wall_s"], 1.0) and math.isclose(b0["processed_s"], 0.3), b0
+    # 50 ms before the read, 50 ms between the static side and the updates,
+    # 700 ms of driver writes and commit after
+    assert [round(b0[k], 6) for k in ("pre_s", "gap_s", "post_s")] == [0.05, 0.05, 0.7], b0
     # a batch that only read its events is still a batch
     assert b2["processed_s"] is None, b2
     assert [round(b2[k], 6) for k in ("pre_s", "gap_s", "post_s")] == [0.02, 0.0, 0.2], b2
     # jobs cover 3000-3200 and 3500-3500.5 inside the batch
+    assert math.isclose(b3["processed_s"], 0.5005), b3
     assert [round(b3[k], 6) for k in ("pre_s", "gap_s", "post_s")] == [0.0, 0.3, 0.0], b3
     text = report(rows)
     assert text.splitlines()[0].split() == ["batch", "wall_s", "processed_s", "pre_s", "gap_s", "post_s", "jobs"], text
