@@ -1,5 +1,6 @@
 package graft.sinks
 
+import java.io.IOException
 import java.util.UUID
 
 import scala.jdk.CollectionConverters._
@@ -54,7 +55,7 @@ object LocalParquet {
     val target = new Path(dir)
     val fs = target.getFileSystem(conf)
     if (overwrite) fs.delete(target, true)
-    if (!fs.mkdirs(target)) throw new java.io.IOException(s"LocalParquet: cannot create $target")
+    if (!fs.mkdirs(target)) throw new IOException(s"LocalParquet: cannot create $target")
     val name = s"part-00000-${UUID.randomUUID()}-c000${codec.getExtension}.parquet"
     val tmp = new Path(target, s"_$name.tmp")
     val writer = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(tmp, conf))
@@ -79,6 +80,6 @@ object LocalParquet {
       }
     } finally writer.close()
     if (!fs.rename(tmp, new Path(target, name)))
-      throw new java.io.IOException(s"LocalParquet: cannot rename $tmp into $target")
+      throw new IOException(s"LocalParquet: cannot rename $tmp into $target")
   }
 }
